@@ -132,12 +132,8 @@ class PipelineConfig:
                                   # (ref drlevel=3 => 1/4096 sampling for genomes;
                                   #  webtext docs are shorter, default denser)
 
-    # --- simhash ---
-    simhash_bits: int = 64
+    # --- simhash (64-bit fingerprints, functions/simhash.py) ---
     simhash_hamming_max: int = 3  # near-dup if hamming distance <= this
-
-    # --- execution ---
-    shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:
         if self.pair_mode not in ("index", "probe", "banded"):

@@ -117,8 +117,7 @@ def _numpy_components(ui: "np.ndarray", vi: "np.ndarray", n: int) -> "np.ndarray
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 50,
-                         driver_cutoff: int = 2_000_000,
-                         _materialized: bool = False) -> DataFrame:
+                         driver_cutoff: int = 2_000_000) -> DataFrame:
     """edges -> membership(doc_id, cluster_id) for every node appearing in edges.
 
     cluster_id = the minimum doc_id of the component (deterministic canonical
@@ -132,34 +131,31 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     corpus).  Larger sets run the distributed star iterations.  Set
     driver_cutoff=0 to force the distributed path.
 
-    r9 (guide §1.2): the driver fast path is now a SINGLE action — one
+    r9 (guide §1.2): the driver fast path is a SINGLE action — one
     ``limit(driver_cutoff + 1)`` Arrow collect both decides the cutoff and
-    delivers the edges (previously: a count+hash fingerprint job, then a
-    separate full collect, each re-reading the barrier), and the
-    normalization is a narrow filter with the dedup left to numpy, so no
-    distinct shuffle runs at all below the cutoff.  ``_materialized=True``
-    (callers whose edge input is already parquet-backed, e.g.
-    dedup.minhash_dedup) additionally skips the redundant barrier write.
+    delivers the edges, and the normalization is a narrow filter with the
+    dedup left to numpy, so no distinct shuffle runs at all below the
+    cutoff.  That collect reads ``edges`` exactly once, so no barrier is
+    written on this path: a composed caller plan executes once either way.
+
+    Above the cutoff the only barrier is the deduplicated ``cc_star`` edge
+    table, so the caller's plan executes a second time after the
+    overflowing limit collect.  That path's star rounds dominate its wall
+    (20-81 s at 1.66M edges, BENCH/SCALE.md), so one extra read of the
+    input is small next to them.
     """
     e = (
         edges.select(F.col(src).cast("long").alias("u"),
                      F.col(dst).cast("long").alias("v"))
         .where(F.col("u") != F.col("v"))
     )
-    # barrier for callers passing a composed edge build: every action below
-    # (the cutoff collect; on the big path the fingerprint + first
-    # iteration) re-executes the caller's plan without it — measured 2x the
-    # whole token-edge join.  Callers that already hold a parquet-backed
-    # edge frame pass _materialized=True and skip the extra round-trip.
-    from rabbittclust_spark.sources.tables import materialize
-    if not _materialized:
-        e = materialize(e, "cc_edges")
     if driver_cutoff:
         pdf = e.limit(driver_cutoff + 1).toPandas()
         if len(pdf) <= driver_cutoff:
             return _driver_union_find(edges.sparkSession, pdf)
     # distributed star path: dedup once behind a barrier (each iteration
     # consumes `e` twice via the symmetrize union)
+    from rabbittclust_spark.sources.tables import materialize
     e = materialize(e.distinct(), "cc_star")
     prev_fp = _edge_fingerprint(e)
     converged = False

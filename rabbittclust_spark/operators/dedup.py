@@ -51,7 +51,6 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
 
 def minhash_dedup(docs: DataFrame, cfg: PipelineConfig,
                   id_col: str = "doc_id", text_col: str = "text",
-                  materialize: bool = True,
                   sketch_df: DataFrame | None = None) -> dict[str, DataFrame]:
     """The flagship pipeline: docs -> assignments at cfg.threshold.
 
@@ -61,11 +60,11 @@ def minhash_dedup(docs: DataFrame, cfg: PipelineConfig,
     assignments with singletons.  Returns the intermediate DataFrames so the
     plan orchestrator can checkpoint each stage.
 
-    materialize=True localCheckpoints the sketch and edge stages so the
-    expensive UDF/join lineage executes exactly once even though the CC
-    fixpoint and the final assignment join consume them in several actions
-    (the parquet-table pipeline in plans/pipeline.py persists stages anyway;
-    this flag serves the in-memory path).
+    The exact-group and sketch stages are written once as temp-parquet
+    barriers (sources.tables.materialize), so the expensive UDF/join lineage
+    executes exactly once even though the candidate build, CC and the final
+    assignment join consume them in several actions (the parquet-table
+    pipeline in plans/pipeline.py persists its own stage tables).
 
     ``sketch_df`` swaps in a precomputed sketch table for the default
     rolling-shingle kernel — (doc_id, len, n, sig array<long>) with sig
@@ -84,13 +83,11 @@ def minhash_dedup(docs: DataFrame, cfg: PipelineConfig,
                        F.col(text_col).alias("text"))
 
     if cfg.exact_prededup:
-        exact = exact_dedup(base)
-        if materialize:
-            # one pass over `base` for the md5 table: the exact mapping is
-            # consumed again by the final assignment join, and `base` may be
-            # expensive to re-derive (e.g. an html-extract UDF) — measured
-            # 3x extract re-execution without this barrier
-            exact = _mat(exact, "exact")
+        # one pass over `base` for the md5 table: the exact mapping is
+        # consumed again by the final assignment join, and `base` may be
+        # expensive to re-derive (e.g. an html-extract UDF) — measured
+        # 3x extract re-execution without this barrier
+        exact = _mat(exact_dedup(base), "exact")
         # r9: spread the few-file text scan BEFORE the canon join — the
         # joined plan's inputFiles() includes the exact barrier's files, so
         # the sketch kernel's own spread gate cannot see that the TEXT side
@@ -111,17 +108,13 @@ def minhash_dedup(docs: DataFrame, cfg: PipelineConfig,
         if sketch_df is not None and "band_keys" not in sketch_df.columns:
             raise ValueError(
                 "banded pair_mode with sketch_df requires a band_keys column")
-        fused = sketch_df if sketch_df is not None \
-            else sketch_minhash_bands(canon_docs, cfg)
-        if materialize:
-            fused = _mat(fused, "sketches")
+        fused = _mat(sketch_df if sketch_df is not None
+                     else sketch_minhash_bands(canon_docs, cfg), "sketches")
         sketches = fused.select("doc_id", "len", "n", "sig")
         bands = fused.select("doc_id", "band_keys")
     else:
-        sketches = sketch_df if sketch_df is not None \
-            else sketch_minhash(canon_docs, cfg)
-        if materialize:
-            sketches = _mat(sketches, "sketches")
+        sketches = _mat(sketch_df if sketch_df is not None
+                        else sketch_minhash(canon_docs, cfg), "sketches")
         bands = None
     edges = build_edges(sketches, cfg, bands=bands)
     # r9: no edge barrier — build_edges ends in a narrow distance filter
@@ -130,7 +123,7 @@ def minhash_dedup(docs: DataFrame, cfg: PipelineConfig,
     # a dedicated edges round-trip was a pure extra write+read job.  The
     # returned dict's "edges" entry stays the same cheap narrow plan for
     # pipeline consumers (plans/pipeline.py persists its own stage anyway).
-    membership = connected_components(edges, _materialized=materialize)
+    membership = connected_components(edges)
     # node universe = the (materialized) sketch table: identical to
     # "canon docs above min_len" but NEVER re-derives `base` (an extract-UDF
     # base would otherwise re-execute here)

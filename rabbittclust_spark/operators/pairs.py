@@ -245,27 +245,7 @@ def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig) -> DataFrame:
         .where(size_ratio_pred(F.col("a.n"), F.col("b.n"), cfg.max_size_ratio()))
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
     )
-    if cfg.min_probe_common > 1:
-        # scale lever for common-phrase-dense corpora (see config.py): most
-        # ACCIDENTAL candidates share exactly one probe hash, while real dup
-        # pairs share many — the count is a map-side-combinable 16-byte-row
-        # aggregate, vastly cheaper than shipping two full sketches per
-        # candidate through the verify join it gates
-        cand = (matched.groupBy("src", "dst")
-                .agg(F.count("*").alias("_pc"))
-                .where(F.col("_pc") >= cfg.min_probe_common)
-                .select("src", "dst"))
-        if star is not None:
-            # escalated hot-hash candidates verify exactly like the others;
-            # the size-ratio pred is skipped for them, which is safe —
-            # ratio-violating pairs mathematically cannot pass the
-            # common-count/threshold filters
-            cand = cand.union(star).distinct()
-    else:
-        # r9: single fused distinct (see candidate_pairs_banded) — identical
-        # pair set, one shuffle instead of two when the cap escalates
-        cand = matched if star is None else matched.union(star)
-        cand = cand.distinct()
+    cand = probe_candidates(matched, star, cfg)
     # materialize the candidate set: splits the query at its natural barrier.
     # Observed on Spark 4.1: fusing candidate-gen + verify into one plan
     # executes the verify join orders of magnitude slower than running the
@@ -285,6 +265,35 @@ def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return joined.where(
         F.col("common") >= common_lower_bound_expr(F.col("n1"), F.col("n2"), cfg.jaccard_min())
     )
+
+
+def probe_candidates(matched: DataFrame, star: DataFrame | None,
+                     cfg: PipelineConfig) -> DataFrame:
+    """Probe-mode candidate set: distinct (src, dst) pairs sharing at least
+    ``cfg.min_probe_common`` cold probe hashes, plus the hot-key star
+    candidates.  ``matched`` must hold exactly one (src, dst) row per pair
+    and shared cold probe — the count below is the shared-probe count.
+    Used by the batch build and the incremental append alike, so both gate
+    candidates the same way."""
+    if cfg.min_probe_common > 1:
+        # scale lever for common-phrase-dense corpora (see config.py): most
+        # ACCIDENTAL candidates share exactly one probe hash, while real dup
+        # pairs share many — the count is a map-side-combinable 16-byte-row
+        # aggregate, vastly cheaper than shipping two full sketches per
+        # candidate through the verify join it gates
+        matched = (matched.groupBy("src", "dst")
+                   .agg(F.count("*").alias("_pc"))
+                   .where(F.col("_pc") >= cfg.min_probe_common)
+                   .select("src", "dst"))
+        if star is None:
+            return matched
+    # escalated hot-hash candidates verify exactly like the others; the
+    # size-ratio pred is skipped for them, which is safe — ratio-violating
+    # pairs mathematically cannot pass the common-count/threshold filters.
+    # r9: ONE distinct over the union (see candidate_pairs_banded) —
+    # identical pair set, one shuffle instead of two when the cap escalates
+    cand = matched if star is None else matched.union(star)
+    return cand.distinct()
 
 
 def verify_join(cand: DataFrame, sketches: DataFrame) -> DataFrame:

@@ -112,7 +112,5 @@ def substring_dedup(docs: DataFrame, cfg: PipelineConfig, window: int = 50,
                                         id_col=id_col, text_col=text_col),
                      "winnow")
     pairs = substring_pairs(fp, cfg, min_containment=min_containment)
-    # pairs is a narrow filter over the substr_pairs barrier — cheap to
-    # re-read, so CC skips its own barrier write (r9)
-    membership = connected_components(pairs, _materialized=True)
+    membership = connected_components(pairs)
     return assignments_from_components(fp.select("doc_id"), membership)

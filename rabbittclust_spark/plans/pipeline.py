@@ -13,7 +13,7 @@ Iceberg tables on a cluster — `df.writeTo(ns.table).createOrReplace()`):
     <root>/assignments    doc_id, cluster_id, is_rep
     <root>/dedup_groups   doc_id, cluster_id, dup_group, rep_id, is_dup_rep
     <root>/communities    doc_id, community     (LPA over the edges pregraph)
-    <root>/metrics        one row per stage run (lineage + per-partition rows)
+    <root>/metrics        one JSON row per stage run (<manifest_id>.json)
 
 Each stage directory carries a `_manifest.json` recording the config hash,
 input manifest ids, row count, per-partition row counts (the north rule's
@@ -49,6 +49,10 @@ from rabbittclust_spark.operators.postprocess import (
 from rabbittclust_spark.operators.sketch import sketch_minhash, sketch_minhash_bands
 
 _MANIFEST = "_manifest.json"
+_METRICS_SCHEMA = (
+    "manifest_id string, stage string, run_id string, config_hash string, "
+    "rows long, partitions int, wall_sec double, created_unix double, "
+    "partition_rows_json string")
 
 
 class DedupPipeline:
@@ -271,20 +275,21 @@ class DedupPipeline:
         }
         with open(self._manifest_path(stage), "w") as f:
             json.dump(manifest, f)
-        self._append_metrics(manifest)
-        return result
-
-    def _append_metrics(self, manifest: dict) -> None:
+        # the stage-run history: one driver-written JSON row per run, so it
+        # survives the next run's overwrite of the stage's manifest
         row = {k: manifest[k] for k in
                ("manifest_id", "stage", "run_id", "config_hash", "rows",
                 "partitions", "wall_sec", "created_unix")}
-        row["partition_rows_json"] = json.dumps(manifest["partition_rows"])
-        df = self.spark.createDataFrame(
-            [row],
-            "manifest_id string, stage string, run_id string, "
-            "config_hash string, rows long, partitions int, wall_sec double, "
-            "created_unix double, partition_rows_json string")
-        df.write.mode("append").parquet(os.path.join(self.out_root, "metrics"))
+        row["partition_rows_json"] = json.dumps(part_rows)
+        metrics_dir = os.path.join(self.out_root, "metrics")
+        os.makedirs(metrics_dir, exist_ok=True)
+        with open(os.path.join(metrics_dir,
+                               f"{manifest['manifest_id']}.json"), "w") as f:
+            json.dump(row, f)
+        return result
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.out_root, "metrics"))
+        """One row per stage run, across runs and resumes of this root."""
+        return (self.spark.read.schema(_METRICS_SCHEMA)
+                .option("pathGlobFilter", "*.json")
+                .json(os.path.join(self.out_root, "metrics")))

@@ -24,17 +24,6 @@ def get_spark(app_name: str = "rabbittclust-spark", master: str | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r9 note (guide §2.2/§2.5): AQE's 1 MB coalesce floor collapses
-        # small-BYTES shuffles to 1-2 partitions, which serializes stages
-        # whose COMPUTE explodes relative to their input (array_intersect
-        # verify joins over candidate pairs).  A global 1-byte floor was
-        # measured WORSE overall (every tiny stage pays 32-task overhead:
-        # flagship 4.5 s -> 5.8 s) while the explosive stages need it
-        # (banded-oracle verify 8.4 s -> 6.9 s, LSH verify 4.1 s -> 1.9 s);
-        # the floor is therefore scoped per-stage via
-        # sources.tables.materialize(wide=True) instead of set here.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "1mb"))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # r9: the CC/LPA driver fast paths fetch their edge sets via ONE
         # limit(cutoff+1) collect.  CollectLimit's default staged execution
@@ -42,8 +31,7 @@ def get_spark(app_name: str = "rabbittclust-spark", master: str | None = None,
         # log4(P) mini-jobs on a P-partition barrier; starting at 128
         # partitions makes the common case a single job while huge inputs
         # still stage up (local limits bound what each task ships).
-        .config("spark.sql.limit.initialNumPartitions",
-                os.environ.get("SPARK_GRAFT_LIMIT_PARTS", "128"))
+        .config("spark.sql.limit.initialNumPartitions", "128")
         # r9 (guide §6): stage barriers are written as temp parquet many
         # times per query — commit files during task commit (v2) instead of
         # a sequential driver-side rename pass, and skip _SUCCESS markers

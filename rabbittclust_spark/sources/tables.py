@@ -130,8 +130,6 @@ def materialize(df: DataFrame, name: str = "stage",
         atexit.register(cleanup_materialized)
     _MATERIALIZE_DIRS.append(d)
     path = os.path.join(d, "data")
-    if wide and os.environ.get("RTC_WIDE_BARRIERS", "1") == "0":
-        wide = False  # measurement escape hatch (tools/r9_profile A/B)
     key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     conf = df.sparkSession.conf
     old = conf.get(key, None) if wide else None

@@ -35,20 +35,34 @@ from rabbittclust_spark.operators.pairs import edges_from_pair_counts
 from rabbittclust_spark.operators.sketch import sketch_minhash
 
 
-def _pair_counts_vs(new_sk: DataFrame, all_sk: DataFrame,
+def _pair_counts_vs(new_sk: DataFrame, old_sk: DataFrame,
                     cfg: PipelineConfig) -> DataFrame:
-    """Pair intersection counts where the src side is restricted to new docs
-    (the reference's start_index lower bound, src/MST.cpp:391-400)."""
-    from rabbittclust_spark.operators.pairs import _apply_posting_cap
+    """Pair intersection counts for every pair touching a new doc (the
+    reference's start_index lower bound, src/MST.cpp:391-400): the same
+    candidate gate (pairs.probe_candidates) and verification as the batch
+    probe build, restricted to those pairs."""
+    from rabbittclust_spark.operators.pairs import (
+        _apply_posting_cap,
+        probe_candidates,
+        verify_join,
+    )
 
     b = int(cfg.probe_hashes)
-    probe_new = new_sk.select("doc_id", "n", F.explode(F.slice("sig", 1, b)).alias("h"))
-    probe_all = all_sk.select("doc_id", "n", F.explode(F.slice("sig", 1, b)).alias("h"))
+
+    def probes(sk: DataFrame, new: bool) -> DataFrame:
+        return sk.select("doc_id", "n", F.lit(new).alias("new"),
+                         F.explode(F.slice("sig", 1, b)).alias("h"))
+
+    probe_new = probes(new_sk, True)
+    probe_all = probes(old_sk, False).unionByName(probe_new)
     # hot-key cap applies to the probed (all-docs) side, like pair_counts_probe
     probe_all, star = _apply_posting_cap(probe_all, "h", cfg, "append")
-    cand = (
+    matched = (
         probe_new.alias("a").join(probe_all.alias("b"), F.col("a.h") == F.col("b.h"))
         .where(F.col("a.doc_id") != F.col("b.doc_id"))
+        # one row per (pair, shared probe): a new x new pair is met from both
+        # sides, so keep only its a < b orientation
+        .where(~F.col("b.new") | (F.col("a.doc_id") < F.col("b.doc_id")))
         .where(size_ratio_pred(F.col("a.n"), F.col("b.n"), cfg.max_size_ratio()))
         .select(F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("src"),
                 F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("dst"))
@@ -64,13 +78,8 @@ def _pair_counts_vs(new_sk: DataFrame, all_sk: DataFrame,
                 .unionByName(
                     star.join(new_ids.withColumnRenamed("doc_id", "dst"),
                               "dst", "left_semi")))
-        cand = cand.union(star)
-    # r9: ONE distinct over raw-pairs (∪ star) — identical candidate set,
-    # one shuffle instead of up to three (see pairs.candidate_pairs_banded)
-    cand = cand.distinct()
-    from rabbittclust_spark.operators.pairs import verify_join
-
-    joined = verify_join(cand, all_sk)
+    cand = probe_candidates(matched, star, cfg)
+    joined = verify_join(cand, old_sk.unionByName(new_sk))
     # barrier after computing `common` — prevents project-collapse from
     # inlining array_intersect into every downstream distance/filter
     # reference (see operators/pairs.pair_counts_probe)
@@ -94,18 +103,9 @@ def append_batch(old_sketches: DataFrame, old_assignments: DataFrame,
     from rabbittclust_spark.sources.tables import materialize
     new_sk = materialize(new_sk, "append_sketches")
     all_sk = old_sketches.unionByName(new_sk)
-
-    pairs = _pair_counts_vs(new_sk, all_sk, cfg)
-    new_edges = edges_from_pair_counts(pairs, cfg)
-
-    # persisted clustering as a graph: member -> cluster id
-    old_edges = old_assignments.select(
-        F.col("doc_id").alias("src"), F.col("cluster_id").alias("dst"),
-        F.lit(0.0).alias("dist"))
-    membership = connected_components(new_edges.unionByName(old_edges))
-    all_ids = all_sk.select("doc_id")
-    from rabbittclust_spark.operators.postprocess import assignments_from_components
-    assignments = assignments_from_components(all_ids, membership)
+    new_edges = edges_from_pair_counts(
+        _pair_counts_vs(new_sk, old_sketches, cfg), cfg)
+    assignments = merge_increment(old_assignments, new_edges, all_sk)
     return {"sketches": all_sk, "assignments": assignments, "edges": new_edges}
 
 

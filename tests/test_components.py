@@ -6,6 +6,7 @@ import random
 from collections import defaultdict, deque
 
 from rabbittclust_spark.operators.components import connected_components
+from rabbittclust_spark.sources import tables
 
 
 def _bfs_components(n_nodes, edges):
@@ -37,22 +38,32 @@ def _bfs_components(n_nodes, edges):
 
 
 def _spark_cc(spark, edges, driver_cutoff=2_000_000):
-    df = spark.createDataFrame(edges, "src long, dst long")
+    # a composed (unioned) edge frame, as callers pass one: CC takes no
+    # barrier of its own, so an overflowing cutoff collect and the star
+    # path each execute this plan
+    half = len(edges) // 2
+    schema = "src long, dst long"
+    df = spark.createDataFrame(edges[:half], schema).union(
+        spark.createDataFrame(edges[half:], schema))
+    barriers = list(tables._MATERIALIZE_DIRS)
     rows = connected_components(df, driver_cutoff=driver_cutoff).collect()
+    if len(edges) <= driver_cutoff:
+        assert tables._MATERIALIZE_DIRS == barriers  # driver path: no barrier
     return {r.doc_id: r.cluster_id for r in rows}
 
 
 def test_cc_matches_bfs_random_graphs(spark):
-    """Both the distributed star path (driver_cutoff=0) and the driver
-    union-find fast path must match the BFS oracle."""
+    """The distributed star path (driver_cutoff=0), the overflowing driver
+    collect that falls through to it (0 < cutoff < edges) and the driver
+    union-find fast path must all match the BFS oracle."""
     rng = random.Random(42)
     for trial in range(3):
         n = 60
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(80)]
         edges = [(u, v) for u, v in edges if u != v]
         expected = _bfs_components(n, edges)
-        assert _spark_cc(spark, edges, driver_cutoff=0) == expected, f"dist {trial}"
-        assert _spark_cc(spark, edges) == expected, f"driver {trial}"
+        for cutoff in (0, 10, 2_000_000):
+            assert _spark_cc(spark, edges, cutoff) == expected, (cutoff, trial)
 
 
 def test_cc_edge_order_invariance(spark):

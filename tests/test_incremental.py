@@ -84,3 +84,32 @@ def test_query_topk_plan_is_candidate_join(spark, base_state):
     plan = buf.getvalue()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_append_candidates_match_batch_probe_gate(spark):
+    """With min_probe_common=2 the append must gate candidates exactly like
+    the batch probe build: docs 1 and 2 (both new) share one of their two
+    probes and 90 other sketch values, so neither path may verify them,
+    while doc 1 x old doc 3 (both probes shared) passes in both."""
+    from rabbittclust_spark.operators.pairs import pair_counts_probe
+    from rabbittclust_spark.streaming.incremental import _pair_counts_vs
+
+    cfg = PipelineConfig(min_len=10, probe_hashes=2, min_probe_common=2)
+    body = list(range(1000, 1090))
+
+    def row(doc_id, probes, tail):
+        sig = sorted(probes + body + list(range(tail, tail + 8)))
+        return (doc_id, 1000, len(sig), sig)
+
+    schema = "doc_id long, len long, n int, sig array<long>"
+    new = spark.createDataFrame([row(1, [1, 2], 5000), row(2, [1, 3], 6000)],
+                                schema)
+    old = spark.createDataFrame([row(3, [1, 2], 7000)], schema)
+
+    def pairs(df):
+        return sorted(tuple(r) for r in
+                      df.select("src", "dst", "n1", "n2", "common").collect())
+
+    batch = pairs(pair_counts_probe(old.unionByName(new), cfg))
+    assert [p[:2] for p in batch] == [(1, 3)]
+    assert pairs(_pair_counts_vs(new, old, cfg)) == batch

@@ -8,7 +8,7 @@ import pytest
 
 from rabbittclust_spark.config import PipelineConfig
 from rabbittclust_spark.fixtures.webtext import WebtextParams, generate_pandas
-from rabbittclust_spark.plans.pipeline import DedupPipeline
+from rabbittclust_spark.plans.pipeline import _MANIFEST, DedupPipeline
 
 P = WebtextParams(num_clusters=6, members_per_cluster=5, num_singletons=10,
                   num_short=3, hot_cluster_size=5)
@@ -80,6 +80,24 @@ def test_metrics_table(spark, corpus, tmp_path_factory):
     stages = {r.stage for r in m.collect()}
     assert {"exact_groups", "sketches", "edges", "membership",
             "assignments"} <= stages
+
+    # the table is the history across runs: a resume after deleting one
+    # stage adds rows for that stage and its dependents under the new run_id
+    import shutil
+    shutil.rmtree(os.path.join(root, "membership"))
+    p2 = DedupPipeline(spark, CFG, root)
+    p2.run(docs, resume=True)
+    rows = p2.metrics().collect()
+    runs = {run: {r.stage for r in rows if r.run_id == run}
+            for run in {r.run_id for r in rows}}
+    assert set(runs) == {p.run_id, p2.run_id}
+    assert runs[p2.run_id] == {"membership", "assignments"}
+    assert len(rows) == len(stages) + 2
+    # the row matches the stage's manifest
+    manifest = json.load(open(os.path.join(root, "membership", _MANIFEST)))
+    (row,) = [r for r in rows if r.manifest_id == manifest["manifest_id"]]
+    assert row.rows == manifest["rows"]
+    assert json.loads(row.partition_rows_json) == manifest["partition_rows"]
 
 
 def test_input_change_invalidates_resume(spark, corpus, tmp_path_factory):

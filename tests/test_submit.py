@@ -28,3 +28,41 @@ def test_spark_submit_py_files(tmp_path):
     # the submitted job wrote real stage tables
     assert os.path.exists(os.path.join(out_dir, "assignments"))
     assert os.path.exists(os.path.join(out_dir, "sketches", "_manifest.json"))
+
+
+def _env_reads(tree):
+    """Names of every environment variable a module reads via os.environ /
+    os.getenv; a non-literal name reads as "<dynamic>"."""
+    import ast
+
+    def is_environ(node):
+        return (isinstance(node, ast.Attribute) and node.attr == "environ"
+                and isinstance(node.value, ast.Name) and node.value.id == "os")
+
+    def name(node):
+        return node.value if isinstance(node, ast.Constant) else "<dynamic>"
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Subscript) and is_environ(node.value):
+            yield name(node.slice)
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            f = node.func
+            if (is_environ(f.value) or (f.attr == "getenv" and isinstance(
+                    f.value, ast.Name) and f.value.id == "os")) and node.args:
+                yield name(node.args[0])
+
+
+def test_package_reads_only_deployment_env_vars():
+    """The engine's only environment inputs are the four deployment
+    settings get_spark reads; no measurement knob steers its behavior."""
+    import ast
+    import glob
+
+    found = {}
+    for path in glob.glob(os.path.join(REPO, "rabbittclust_spark", "**", "*.py"),
+                          recursive=True):
+        with open(path) as f:
+            for var in _env_reads(ast.parse(f.read())):
+                found.setdefault(var, os.path.relpath(path, REPO))
+    assert set(found) == {"SPARK_GRAFT_MASTER", "SPARK_GRAFT_CPUS",
+                          "SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_DRIVER_MEM"}, found
