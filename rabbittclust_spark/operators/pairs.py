@@ -1,6 +1,14 @@
 """Candidate-pair generation + distance evaluation -> edges DataFrame.
 
-Two modes:
+Three modes (``cfg.pair_mode``):
+
+**probe** (default): each doc's bottom-``probe_hashes`` sketch values are
+its probes; docs sharing a probe (at least ``min_probe_common`` of them) are
+candidates, verified with an exact JVM-side ``array_intersect`` of the
+bottom-s sketches (see pair_counts_probe).  The same builder serves the
+incremental append: given ``settled`` sketches (docs whose pairs among
+themselves are known — the reference's start index, src/MST.cpp:391-400),
+it builds only the pairs touching a doc of ``sketches``.
 
 **index** (reference-parity): explode sketch hash values and self-join on the
 hash — the DataFrame form of the reference's inverted-index posting-list
@@ -23,7 +31,7 @@ signature — O(candidate pairs) instead of O(sum posting^2) — then verify eac
 candidate with an exact JVM-side ``array_intersect`` of the bottom-s sketches
 (the reference's sorted-array merge intersection, src/greedy.cpp:39-67).
 
-Both modes end in the same Mash/containment distance column expressions and a
+All modes end in the same Mash/containment distance column expressions and a
 ``dist <= threshold`` filter, producing ``edges(src, dst, dist)``.
 """
 
@@ -208,7 +216,8 @@ def pair_counts_index(sketches: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig,
+                      settled: DataFrame | None = None) -> DataFrame:
     """Probe-subset candidate generation + exact verification (scale path #2).
 
     Candidates = pairs sharing >= 1 of each doc's bottom-``probe_hashes``
@@ -216,16 +225,28 @@ def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig) -> DataFrame:
     bottom-B subset).  For a pair with true sketch Jaccard J the miss
     probability is ~(1-J)^B — at B=32 and the d=0.05 boundary (J=0.212)
     that is 4.9e-4, inside the recall>=0.99 budget (real dup pairs sit well
-    above the boundary: J=0.4 -> 8.6e-8).  Verification computes the EXACT
-    intersection count via JVM array_intersect (the reference's sorted-array
-    merge intersection, src/greedy.cpp:39-67), so distances are identical to
-    index mode; only candidate discovery is probabilistic.
+    above the boundary: J=0.4 -> 8.6e-8).  With ``cfg.min_probe_common > 1``
+    a candidate must share that many cold probes.  Verification computes the
+    EXACT intersection count via JVM array_intersect (the reference's
+    sorted-array merge intersection, src/greedy.cpp:39-67), so distances are
+    identical to index mode; only candidate discovery is probabilistic.
+
+    ``settled`` is the append form (the reference's start index,
+    src/MST.cpp:391-400): sketches of docs whose pairs among themselves are
+    already known.  Only pairs touching a doc of ``sketches`` are built; the
+    posting cap counts postings and verification reads sketches over
+    ``sketches`` and ``settled`` together.
 
     Scale rationale: posting rows shrink s/B-fold (31x at defaults), and the
     heavy work moves from the skewed posting join to the per-pair verify
     join, which parallelizes by pair with no hot keys.
     """
     b = int(cfg.probe_hashes)
+
+    def probes(sk: DataFrame, new: bool) -> DataFrame:
+        return sk.select(F.col("doc_id"), F.col("n"), F.lit(new).alias("new"),
+                         F.explode(F.slice("sig", 1, b)).alias("h"))
+
     # r9: the sketch barrier is a few small files at bench scale, so the
     # posting explode + broadcast-hash self-join + pair dedup would inherit
     # 1-2 partitions and run serial (measured: the banded twin's candidate
@@ -233,48 +254,26 @@ def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # the explode (file-count gated — a many-file barrier at scale passes
     # through untouched)
     from rabbittclust_spark.operators.sketch import _spread_for_cpu_kernel
-    probes = _spread_for_cpu_kernel(sketches.select("doc_id", "n", "sig")).select(
-        F.col("doc_id"), F.col("n"),
-        F.explode(F.slice("sig", 1, b)).alias("h"),
-    )
-    probes, star = _apply_posting_cap(probes, "h", cfg, "probe")
-    pa, pb = probes.alias("a"), probes.alias("b")
+    sketches = sketches.select("doc_id", "n", "sig")
+    probed = probes(_spread_for_cpu_kernel(sketches), True)
+    docs = sketches
+    if settled is not None:
+        probed = probes(settled, False).unionByName(probed)
+        docs = settled.select("doc_id", "n", "sig").unionByName(sketches)
+    probed, star = _apply_posting_cap(
+        probed, "h", cfg, "probe" if settled is None else "append")
+    pa, pb = probed.where("new").alias("a"), probed.alias("b")
     matched = (
         pa.join(pb, F.col("a.h") == F.col("b.h"))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        # one row per (pair, shared probe): a new x new pair is met from both
+        # sides, so keep only its a < b orientation.  With settled=None every
+        # row is new and this folds to a.doc_id < b.doc_id
+        .where((F.col("a.doc_id") < F.col("b.doc_id"))
+               | (~F.col("b.new") & (F.col("a.doc_id") != F.col("b.doc_id"))))
         .where(size_ratio_pred(F.col("a.n"), F.col("b.n"), cfg.max_size_ratio()))
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
+        .select(F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("src"),
+                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("dst"))
     )
-    cand = probe_candidates(matched, star, cfg)
-    # materialize the candidate set: splits the query at its natural barrier.
-    # Observed on Spark 4.1: fusing candidate-gen + verify into one plan
-    # executes the verify join orders of magnitude slower than running the
-    # two halves as separate jobs (each is seconds); a persisted candidate
-    # table is also what the checkpointed pipeline does anyway.
-    # (r9: wide=True was A/B-measured NET-NEGATIVE here — the verify join
-    # ships sig arrays, and 32-way SHJ over tiny inputs costs more than the
-    # parallelism buys; see OPTIMIZATION_r09.md "wide flag placement")
-    from rabbittclust_spark.sources.tables import materialize
-    cand = materialize(cand, "cand")
-    joined = verify_join(cand, sketches)
-    # barrier AFTER computing `common`: project-collapse would otherwise
-    # inline the array_intersect expression into every downstream reference
-    # (jaccard, distance, filters) — observed ~20x re-evaluation per row.
-    # Behind the barrier it is a scalar column evaluated exactly once.
-    joined = materialize(joined, "pair_counts")
-    return joined.where(
-        F.col("common") >= common_lower_bound_expr(F.col("n1"), F.col("n2"), cfg.jaccard_min())
-    )
-
-
-def probe_candidates(matched: DataFrame, star: DataFrame | None,
-                     cfg: PipelineConfig) -> DataFrame:
-    """Probe-mode candidate set: distinct (src, dst) pairs sharing at least
-    ``cfg.min_probe_common`` cold probe hashes, plus the hot-key star
-    candidates.  ``matched`` must hold exactly one (src, dst) row per pair
-    and shared cold probe — the count below is the shared-probe count.
-    Used by the batch build and the incremental append alike, so both gate
-    candidates the same way."""
     if cfg.min_probe_common > 1:
         # scale lever for common-phrase-dense corpora (see config.py): most
         # ACCIDENTAL candidates share exactly one probe hash, while real dup
@@ -285,15 +284,50 @@ def probe_candidates(matched: DataFrame, star: DataFrame | None,
                    .agg(F.count("*").alias("_pc"))
                    .where(F.col("_pc") >= cfg.min_probe_common)
                    .select("src", "dst"))
-        if star is None:
-            return matched
-    # escalated hot-hash candidates verify exactly like the others; the
-    # size-ratio pred is skipped for them, which is safe — ratio-violating
-    # pairs mathematically cannot pass the common-count/threshold filters.
-    # r9: ONE distinct over the union (see candidate_pairs_banded) —
-    # identical pair set, one shuffle instead of two when the cap escalates
-    cand = matched if star is None else matched.union(star)
-    return cand.distinct()
+    if star is None:
+        cand = matched if cfg.min_probe_common > 1 else matched.distinct()
+    else:
+        if settled is not None:
+            # settled x settled pairs are already known: keep the star
+            # candidates touching >= 1 new doc
+            new_ids = sketches.select("doc_id")
+            star = (star.join(new_ids.withColumnRenamed("doc_id", "src"),
+                              "src", "left_semi")
+                    .unionByName(star.join(
+                        new_ids.withColumnRenamed("doc_id", "dst"),
+                        "dst", "left_semi")))
+        # escalated hot-hash candidates verify exactly like the others; the
+        # size-ratio pred is skipped for them, which is safe — ratio-violating
+        # pairs mathematically cannot pass the common-count/threshold filters.
+        # r9: ONE distinct over the union (see candidate_pairs_banded) —
+        # identical pair set, one shuffle instead of two when the cap escalates
+        cand = matched.union(star).distinct()
+    from rabbittclust_spark.sources.tables import materialize
+    if settled is None:
+        # materialize the candidate set: splits the query at its natural
+        # barrier, on the batch build only.  perfbench seed 1, local[4] on a
+        # shared 4-vCPU VM, with and without it interleaved in one Spark app
+        # after warm-up: a stream_append_query append took 3.89 s with it vs
+        # 3.76 s without (13 pairs, slower in 10) and 4.27 vs 4.17 s (11
+        # pairs, slower in 7), so the append goes without; a crawl_batch
+        # pipeline op took 5.45 vs 5.76 s (8 pairs, faster in 7), 6.99 vs
+        # 6.75 s (8 pairs, faster in 2) and 5.53 vs 5.54 s (12 pairs, faster
+        # in 4): no steady cost there, and perfbench times the split halves
+        # as pairs.cand_s and pairs.verify_s.  (r9: wide=True was
+        # A/B-measured NET-NEGATIVE here — the verify join ships sig arrays,
+        # and 32-way SHJ over tiny inputs costs more than the parallelism
+        # buys; see OPTIMIZATION_r09.md "wide flag placement")
+        cand = materialize(cand, "cand")
+    joined = verify_join(cand, docs)
+    # barrier AFTER computing `common`: project-collapse would otherwise
+    # inline the array_intersect expression into every downstream reference
+    # (jaccard, distance, filters) — observed ~20x re-evaluation per row.
+    # Behind the barrier it is a scalar column evaluated exactly once.
+    joined = materialize(
+        joined, "pair_counts" if settled is None else "append_pair_counts")
+    return joined.where(
+        F.col("common") >= common_lower_bound_expr(F.col("n1"), F.col("n2"), cfg.jaccard_min())
+    )
 
 
 def verify_join(cand: DataFrame, sketches: DataFrame) -> DataFrame:

@@ -68,13 +68,7 @@ def sketch_minhash(df: DataFrame, cfg: PipelineConfig,
                 sigs.append(_as_long_list(sig))
             yield pd.DataFrame({"doc_id": ids, "len": lens, "n": ns, "sig": sigs})
 
-    prepared = (
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col).alias("text"))
-        .filter(F.length(F.col("text")) >= cfg.min_len)
-    )
-    return _spread_for_cpu_kernel(prepared).mapInPandas(
-        compute, schema=_SKETCH_SCHEMA)
+    return _text_kernel(df, cfg, id_col, text_col, compute, _SKETCH_SCHEMA)
 
 
 def sketch_fracminhash(df: DataFrame, cfg: PipelineConfig,
@@ -96,13 +90,7 @@ def sketch_fracminhash(df: DataFrame, cfg: PipelineConfig,
                 sigs.append(_as_long_list(sig))
             yield pd.DataFrame({"doc_id": ids, "len": lens, "n": ns, "sig": sigs})
 
-    prepared = (
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col).alias("text"))
-        .filter(F.length(F.col("text")) >= cfg.min_len)
-    )
-    return _spread_for_cpu_kernel(prepared).mapInPandas(
-        compute, schema=_SKETCH_SCHEMA)
+    return _text_kernel(df, cfg, id_col, text_col, compute, _SKETCH_SCHEMA)
 
 
 def sketch_simhash(df: DataFrame, cfg: PipelineConfig,
@@ -121,13 +109,8 @@ def sketch_simhash(df: DataFrame, cfg: PipelineConfig,
                 "simhash": np.array(sh, dtype=np.int64),
             })
 
-    prepared = (
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col).alias("text"))
-        .filter(F.length(F.col("text")) >= cfg.min_len)
-    )
-    return _spread_for_cpu_kernel(prepared).mapInPandas(
-        compute, schema="doc_id long, len long, simhash long")
+    return _text_kernel(df, cfg, id_col, text_col, compute,
+                        "doc_id long, len long, simhash long")
 
 
 def sketch_bands(df: DataFrame, cfg: PipelineConfig,
@@ -146,13 +129,8 @@ def sketch_bands(df: DataFrame, cfg: PipelineConfig,
                 keys.append(_as_long_list(band_hashes(sig, r)))
             yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "band_keys": keys})
 
-    prepared = (
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col).alias("text"))
-        .filter(F.length(F.col("text")) >= cfg.min_len)
-    )
-    return _spread_for_cpu_kernel(prepared).mapInPandas(
-        compute, schema="doc_id long, band_keys array<long>")
+    return _text_kernel(df, cfg, id_col, text_col, compute,
+                        "doc_id long, band_keys array<long>")
 
 
 def sketch_minhash_bands(df: DataFrame, cfg: PipelineConfig,
@@ -193,13 +171,22 @@ def sketch_minhash_bands(df: DataFrame, cfg: PipelineConfig,
                                 "len": lens, "n": ns, "sig": sigs,
                                 "band_keys": keys})
 
+    return _text_kernel(df, cfg, id_col, text_col, compute,
+                        _SKETCH_SCHEMA + ", band_keys array<long>")
+
+
+def _text_kernel(df: DataFrame, cfg: PipelineConfig, id_col: str,
+                 text_col: str, compute, schema: str) -> DataFrame:
+    """Run a per-batch text kernel over the (doc_id, text) projection of
+    ``df``: drop docs shorter than ``cfg.min_len`` (reference -m minLen,
+    src/SketchInfo.cpp:963,1210) before the kernel, spread the rows over the
+    cores, then ``mapInPandas(compute, schema)``."""
     prepared = (
         df.select(F.col(id_col).cast("long").alias("doc_id"),
                   F.col(text_col).alias("text"))
         .filter(F.length(F.col("text")) >= cfg.min_len)
     )
-    return _spread_for_cpu_kernel(prepared).mapInPandas(
-        compute, schema=_SKETCH_SCHEMA + ", band_keys array<long>")
+    return _spread_for_cpu_kernel(prepared).mapInPandas(compute, schema=schema)
 
 
 def _spread_for_cpu_kernel(prepared: DataFrame) -> DataFrame:
@@ -257,10 +244,4 @@ def sketch_wminhash(df: DataFrame, cfg: PipelineConfig, num_samples: int = 128,
                                 "n": [num_samples] * len(lens),
                                 "sig": sigs})
 
-    prepared = (
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(text_col).alias("text"))
-        .filter(F.length(F.col("text")) >= cfg.min_len)
-    )
-    return _spread_for_cpu_kernel(prepared).mapInPandas(
-        compute, schema=_SKETCH_SCHEMA)
+    return _text_kernel(df, cfg, id_col, text_col, compute, _SKETCH_SCHEMA)

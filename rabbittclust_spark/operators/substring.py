@@ -40,13 +40,10 @@ def sketch_winnow(df: DataFrame, cfg: PipelineConfig, window: int = 50,
             yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(),
                                 "len": lens, "n_fp": ns, "fp": fps})
 
-    from rabbittclust_spark.operators.sketch import _spread_for_cpu_kernel
+    from rabbittclust_spark.operators.sketch import _text_kernel
 
-    prepared = (df.select(F.col(id_col).cast("long").alias("doc_id"),
-                          F.col(text_col).alias("text"))
-                .filter(F.length("text") >= cfg.min_len))
-    return _spread_for_cpu_kernel(prepared).mapInPandas(
-        compute, schema="doc_id long, len long, n_fp int, fp array<long>")
+    return _text_kernel(df, cfg, id_col, text_col, compute,
+                        "doc_id long, len long, n_fp int, fp array<long>")
 
 
 def substring_pairs(fp_sketches: DataFrame, cfg: PipelineConfig,

@@ -7,11 +7,14 @@ Reference semantics being reproduced (src/mst_state.h:13-30):
     - within d of none: new cluster
 plus batch-internal edges (new docs can cluster with each other).
 
-Spark form: compute sketches for the new batch; build edges between
-(new x all) and (new x new) documents; union with the existing assignment
-edges (doc -> cluster representative, the persisted clustering as a graph);
-re-run connected components.  Merge-on-multi-match falls out of CC
-transitivity — no special casing (SURVEY.md §2.10).
+Spark form: compute sketches for the new batch; build the edges of every
+pair touching a new doc — (new x settled) and (new x new) — with the batch
+probe builder, ``pairs.pair_counts_probe(new, cfg, settled=old)``, so the
+posting cap, star escalation, probe gate and exact verification are the
+batch build's own; union with the existing assignment edges (doc -> cluster
+representative, the persisted clustering as a graph); re-run connected
+components.  Merge-on-multi-match falls out of CC transitivity — no special
+casing (SURVEY.md §2.10).
 
 Also provides the RepDB query surface (src/greedy.cpp:2536-2638 top-k;
 src/sub_command.cpp:337-450 assign): top-k nearest representatives per query
@@ -24,70 +27,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rabbittclust_spark.config import PipelineConfig
-from rabbittclust_spark.functions.distances import (
-    common_lower_bound_expr,
-    jaccard_expr,
-    mash_distance_expr,
-    size_ratio_pred,
-)
+from rabbittclust_spark.functions.distances import jaccard_expr, mash_distance_expr
 from rabbittclust_spark.operators.components import connected_components
-from rabbittclust_spark.operators.pairs import edges_from_pair_counts
+from rabbittclust_spark.operators.pairs import (
+    edges_from_pair_counts,
+    pair_counts_probe,
+)
 from rabbittclust_spark.operators.sketch import sketch_minhash
-
-
-def _pair_counts_vs(new_sk: DataFrame, old_sk: DataFrame,
-                    cfg: PipelineConfig) -> DataFrame:
-    """Pair intersection counts for every pair touching a new doc (the
-    reference's start_index lower bound, src/MST.cpp:391-400): the same
-    candidate gate (pairs.probe_candidates) and verification as the batch
-    probe build, restricted to those pairs."""
-    from rabbittclust_spark.operators.pairs import (
-        _apply_posting_cap,
-        probe_candidates,
-        verify_join,
-    )
-
-    b = int(cfg.probe_hashes)
-
-    def probes(sk: DataFrame, new: bool) -> DataFrame:
-        return sk.select("doc_id", "n", F.lit(new).alias("new"),
-                         F.explode(F.slice("sig", 1, b)).alias("h"))
-
-    probe_new = probes(new_sk, True)
-    probe_all = probes(old_sk, False).unionByName(probe_new)
-    # hot-key cap applies to the probed (all-docs) side, like pair_counts_probe
-    probe_all, star = _apply_posting_cap(probe_all, "h", cfg, "append")
-    matched = (
-        probe_new.alias("a").join(probe_all.alias("b"), F.col("a.h") == F.col("b.h"))
-        .where(F.col("a.doc_id") != F.col("b.doc_id"))
-        # one row per (pair, shared probe): a new x new pair is met from both
-        # sides, so keep only its a < b orientation
-        .where(~F.col("b.new") | (F.col("a.doc_id") < F.col("b.doc_id")))
-        .where(size_ratio_pred(F.col("a.n"), F.col("b.n"), cfg.max_size_ratio()))
-        .select(F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("src"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("dst"))
-    )
-    if star is not None:
-        # escalated hot-key candidates (anchor-star) verify exactly below;
-        # restricted to pairs touching >= 1 NEW doc — the append contract is
-        # "src side limited to new docs" (start_index, src/MST.cpp:391-400),
-        # and old x old pairs are already settled in the persisted state
-        new_ids = new_sk.select("doc_id")
-        star = (star.join(new_ids.withColumnRenamed("doc_id", "src"),
-                          "src", "left_semi")
-                .unionByName(
-                    star.join(new_ids.withColumnRenamed("doc_id", "dst"),
-                              "dst", "left_semi")))
-    cand = probe_candidates(matched, star, cfg)
-    joined = verify_join(cand, old_sk.unionByName(new_sk))
-    # barrier after computing `common` — prevents project-collapse from
-    # inlining array_intersect into every downstream distance/filter
-    # reference (see operators/pairs.pair_counts_probe)
-    from rabbittclust_spark.sources.tables import materialize
-    joined = materialize(joined, "append_pair_counts")
-    return joined.where(
-        F.col("common") >= common_lower_bound_expr(F.col("n1"), F.col("n2"),
-                                                   cfg.jaccard_min()))
 
 
 def append_batch(old_sketches: DataFrame, old_assignments: DataFrame,
@@ -96,15 +42,23 @@ def append_batch(old_sketches: DataFrame, old_assignments: DataFrame,
                  ) -> dict[str, DataFrame]:
     """Returns {"sketches": updated, "assignments": merged, "edges": new}.
 
+    New-doc pairs come from the batch probe builder with the persisted
+    sketches as its settled side (``pair_counts_probe(new, cfg,
+    settled=old)``), so the append uses the probe candidate gate whatever
+    ``pair_mode`` built the state; verification is exact either way.  Only
+    the flat (doc_id, len, n, sig) columns of the state are read, so a
+    banded state's ``band_keys`` are ignored.
+
     Cluster ids remain the component-min doc id, so re-clustering is stable:
     untouched clusters keep their ids (their min member is unchanged).
     """
     new_sk = sketch_minhash(new_docs, cfg, id_col=id_col, text_col=text_col)
     from rabbittclust_spark.sources.tables import materialize
     new_sk = materialize(new_sk, "append_sketches")
-    all_sk = old_sketches.unionByName(new_sk)
+    old_sk = old_sketches.select("doc_id", "len", "n", "sig")
+    all_sk = old_sk.unionByName(new_sk)
     new_edges = edges_from_pair_counts(
-        _pair_counts_vs(new_sk, old_sketches, cfg), cfg)
+        pair_counts_probe(new_sk, cfg, settled=old_sk), cfg)
     assignments = merge_increment(old_assignments, new_edges, all_sk)
     return {"sketches": all_sk, "assignments": assignments, "edges": new_edges}
 

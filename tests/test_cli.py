@@ -4,10 +4,11 @@ the reference-flag mapping MIGRATION.md documents."""
 import json
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 import run_pipeline  # noqa: E402
 

@@ -4,11 +4,12 @@ sklearn normalized_mutual_info_score; benchmark/evaluation/src/
 calPurity.cpp:195-232 purity + coverage)."""
 
 import sys
+from pathlib import Path
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.evaluate import evaluate_assignments, nmi, purity, truth_labels
 

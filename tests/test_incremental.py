@@ -86,30 +86,71 @@ def test_query_topk_plan_is_candidate_join(spark, base_state):
     assert "CartesianProduct" not in plan
 
 
-def test_append_candidates_match_batch_probe_gate(spark):
-    """With min_probe_common=2 the append must gate candidates exactly like
-    the batch probe build: docs 1 and 2 (both new) share one of their two
-    probes and 90 other sketch values, so neither path may verify them,
-    while doc 1 x old doc 3 (both probes shared) passes in both."""
+_SK_SCHEMA = "doc_id long, len long, n int, sig array<long>"
+
+
+def _sk_row(doc_id, probes, tail):
+    """A sketch whose bottom values are ``probes``, then 90 values every
+    test doc shares, then 8 of its own from ``tail``."""
+    sig = sorted(probes + list(range(1000, 1090)) + list(range(tail, tail + 8)))
+    return (doc_id, 1000, len(sig), sig)
+
+
+@pytest.mark.parametrize("case", ["probe_gate", "star"])
+def test_append_candidates_match_batch_probe_gate(spark, case):
+    """The append must build exactly the batch probe build's pairs that
+    touch a new doc.
+
+    probe_gate: with min_probe_common=2, docs 1 and 2 (both new) share one
+    of their two probes and 90 other sketch values, so neither path may
+    verify them, while doc 1 x old doc 3 (both probes shared) passes in
+    both.
+
+    star: probe 1 is held by four docs, above max_posting=3, so the cap
+    escalates it to anchor-star candidates in both paths.  Old docs 3 and 4
+    share only that hot probe: the batch finds them through the star, and
+    the append must not, because settled x settled pairs are known."""
     from rabbittclust_spark.operators.pairs import pair_counts_probe
-    from rabbittclust_spark.streaming.incremental import _pair_counts_vs
 
-    cfg = PipelineConfig(min_len=10, probe_hashes=2, min_probe_common=2)
-    body = list(range(1000, 1090))
-
-    def row(doc_id, probes, tail):
-        sig = sorted(probes + body + list(range(tail, tail + 8)))
-        return (doc_id, 1000, len(sig), sig)
-
-    schema = "doc_id long, len long, n int, sig array<long>"
-    new = spark.createDataFrame([row(1, [1, 2], 5000), row(2, [1, 3], 6000)],
-                                schema)
-    old = spark.createDataFrame([row(3, [1, 2], 7000)], schema)
+    if case == "probe_gate":
+        cfg = PipelineConfig(min_len=10, probe_hashes=2, min_probe_common=2)
+        new = [_sk_row(1, [1, 2], 5000), _sk_row(2, [1, 3], 6000)]
+        old = [_sk_row(3, [1, 2], 7000)]
+    else:
+        cfg = PipelineConfig(min_len=10, probe_hashes=2, max_posting=3)
+        new = [_sk_row(1, [1, 11], 5000), _sk_row(2, [1, 12], 6000)]
+        old = [_sk_row(3, [1, 13], 7000), _sk_row(4, [1, 14], 8000)]
+    new = spark.createDataFrame(new, _SK_SCHEMA)
+    old = spark.createDataFrame(old, _SK_SCHEMA)
+    new_ids = {r.doc_id for r in new.collect()}
 
     def pairs(df):
         return sorted(tuple(r) for r in
                       df.select("src", "dst", "n1", "n2", "common").collect())
 
     batch = pairs(pair_counts_probe(old.unionByName(new), cfg))
-    assert [p[:2] for p in batch] == [(1, 3)]
-    assert pairs(_pair_counts_vs(new, old, cfg)) == batch
+    append = pairs(pair_counts_probe(new, cfg, settled=old))
+    if case == "probe_gate":
+        assert [p[:2] for p in batch] == [(1, 3)]
+    else:
+        assert (3, 4) in [p[:2] for p in batch]
+    assert append == [p for p in batch if {p[0], p[1]} & new_ids]
+
+
+def test_append_onto_banded_state(spark):
+    """A banded build's sketches carry band_keys; appending onto them must
+    read only the flat sketch columns and cluster like any other state."""
+    from rabbittclust_spark.operators.sketch import sketch_minhash_bands
+
+    a = "alpha bravo charlie delta echo foxtrot golf hotel " * 30
+    b = "india juliet kilo lima mike november oscar papa " * 30
+    cfg = PipelineConfig(min_len=10, exact_prededup=False)
+    old_sk = sketch_minhash_bands(_mk_docs(spark, [(1, a), (3, b)]), cfg)
+    assert "band_keys" in old_sk.columns
+    old_assign = spark.createDataFrame([(1, 1), (3, 3)],
+                                       "doc_id long, cluster_id long")
+    out = append_batch(old_sk, old_assign,
+                       _mk_docs(spark, [(10, a + "yankee ")]), cfg)
+    got = {r.doc_id: r.cluster_id for r in out["assignments"].collect()}
+    assert got == {1: 1, 3: 3, 10: 1}
+    assert out["sketches"].columns == ["doc_id", "len", "n", "sig"]
