@@ -17,7 +17,13 @@ Iceberg tables on a cluster — `df.writeTo(ns.table).createOrReplace()`):
 
 Each stage directory carries a `_manifest.json` recording the config hash,
 input manifest ids, row count, per-partition row counts (the north rule's
-per-partition lineage), and wall time.  ``run(resume=True)`` skips any stage
+per-partition lineage), the stage schema and wall time.  The lineage is per
+WRITTEN partition: the partition id in each ``part-NNNNN-*`` file name and
+the rows its parquet footers hold, so no Spark job re-scans a stage after
+its write.  Every read-back (fresh or resumed) passes the recorded schema,
+which skips Spark's schema-inference job; a manifest without a schema (one
+written before it was recorded) does not match, so its stage recomputes
+once.  ``run(resume=True)`` skips any stage
 whose manifest matches the current config and upstream lineage — the
 reference's --presketched/--premsted resume surface
 (src/main.cpp:616-641), generalized to every stage.  Manifests are gated on
@@ -35,6 +41,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from rabbittclust_spark.config import PipelineConfig
 from rabbittclust_spark.operators.components import connected_components
@@ -53,6 +60,42 @@ _METRICS_SCHEMA = (
     "manifest_id string, stage string, run_id string, config_hash string, "
     "rows long, partitions int, wall_sec double, created_unix double, "
     "partition_rows_json string")
+
+
+def input_fingerprint(docs: DataFrame, id_col: str,
+                      content_col: str) -> dict[str, str]:
+    """Fingerprint of the INPUT data (row count + content hash sum) that the
+    root stages' manifests carry, so resume=True never returns stale stage
+    outputs after the source dataset changed — root-stage manifests would
+    otherwise match on config hash alone.  The only Spark job of a resume
+    over a complete root."""
+    # hash the content column AS-IS (xxhash64 accepts binary): casting
+    # binary html to string would be a lossy UTF-8 reinterpretation —
+    # two different payloads with invalid byte sequences could
+    # fingerprint identically and serve stale stage outputs on resume
+    fp_row = docs.agg(
+        F.count("*").alias("c"),
+        F.coalesce(
+            F.sum(F.xxhash64(F.col(id_col).cast("string"), F.col(content_col))
+                  .cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)")).alias("s"),
+    ).collect()[0]
+    return {"__docs__": f"{int(fp_row['c'])}:{int(fp_row['s'])}"}
+
+
+def _written_partition_rows(path: str) -> list[list[int]]:
+    """[[write partition id, rows], ...] of a parquet directory, from the
+    ``part-NNNNN-*`` file names and their footers: no Spark job runs.
+    Partitions that wrote no rows are left out."""
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for name in os.listdir(path):
+        if name.startswith("part-") and name.endswith(".parquet"):
+            pid = int(name.split("-")[1])
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return [[pid, n] for pid, n in sorted(rows.items()) if n]
 
 
 class DedupPipeline:
@@ -80,24 +123,8 @@ class DedupPipeline:
             table="webtext")
         out: dict[str, DataFrame] = {}
 
-        # fingerprint the INPUT data (row count + content hash sum) so
-        # resume=True never returns stale stage outputs after the source
-        # dataset changed — root-stage manifests would otherwise match on
-        # config hash alone.
-        # hash the content column AS-IS (xxhash64 accepts binary): casting
-        # binary html to string would be a lossy UTF-8 reinterpretation —
-        # two different payloads with invalid byte sequences could
-        # fingerprint identically and serve stale stage outputs on resume
-        content_col = html_col if html_col is not None else text_col
-        fp_row = docs.agg(
-            F.count("*").alias("c"),
-            F.coalesce(
-                F.sum(F.xxhash64(F.col(id_col).cast("string"),
-                                 F.col(content_col))
-                      .cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)")).alias("s"),
-        ).collect()[0]
-        input_fp = {"__docs__": f"{int(fp_row['c'])}:{int(fp_row['s'])}"}
+        input_fp = input_fingerprint(
+            docs, id_col, html_col if html_col is not None else text_col)
 
         if html_col is not None:
             out["extracted"] = self._stage(
@@ -246,20 +273,17 @@ class DedupPipeline:
         m = self._read_manifest(stage)
         if (resume and m is not None
                 and m.get("config_hash") == self.cfg.stage_hash(stage)
-                and m.get("inputs") == input_ids):
-            return self.spark.read.parquet(path)
+                and m.get("inputs") == input_ids
+                and "schema" in m):
+            schema = StructType.fromJson(json.loads(m["schema"]))
+            return self.spark.read.schema(schema).parquet(path)
 
         t0 = time.time()
         df = compute()
         df.write.mode("overwrite").parquet(path)
         wall = time.time() - t0
-        result = self.spark.read.parquet(path)
-        # per-partition lineage: row count per output partition
-        part_rows = [
-            [int(r["pid"]), int(r["rows"])]
-            for r in result.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows")).collect()
-        ]
+        result = self.spark.read.schema(df.schema).parquet(path)
+        part_rows = _written_partition_rows(path)
         manifest = {
             "manifest_id": uuid.uuid4().hex[:12],
             "stage": stage,
@@ -270,6 +294,7 @@ class DedupPipeline:
             "rows": int(sum(r for _, r in part_rows)),
             "partitions": len(part_rows),
             "partition_rows": part_rows,
+            "schema": df.schema.json(),
             "wall_sec": round(wall, 3),
             "created_unix": time.time(),
         }

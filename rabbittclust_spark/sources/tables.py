@@ -9,6 +9,8 @@ schemas are identical.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,20 +49,6 @@ def validate_input_schema(df: DataFrame, required: dict[str, str],
             + f"; actual schema: {actual}")
 
 
-def write_stage(df: DataFrame, out_root: str, stage: str,
-                partition_by: list[str] | None = None) -> str:
-    path = os.path.join(out_root, stage)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    return path
-
-
-def read_stage(spark: SparkSession, out_root: str, stage: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_root, stage))
-
-
 _MATERIALIZE_DIRS: list[str] = []
 
 
@@ -78,7 +66,7 @@ def cleanup_materialized() -> None:
     _MATERIALIZE_DIRS.clear()
 
 
-import contextlib
+atexit.register(cleanup_materialized)
 
 
 @contextlib.contextmanager
@@ -122,12 +110,9 @@ def materialize(df: DataFrame, name: str = "stage",
     Temp dirs are tracked and removed at interpreter exit so long-lived
     drivers don't leak /tmp disk across repeated pair-generation calls.
     """
-    import atexit
     import tempfile
 
     d = tempfile.mkdtemp(prefix=f"rtc_{name}_")
-    if not _MATERIALIZE_DIRS:
-        atexit.register(cleanup_materialized)
     _MATERIALIZE_DIRS.append(d)
     path = os.path.join(d, "data")
     key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
@@ -143,4 +128,6 @@ def materialize(df: DataFrame, name: str = "stage",
                 conf.unset(key)
             else:
                 conf.set(key, old)
-    return df.sparkSession.read.parquet(path)
+    # read back with the writer's schema: without it Spark runs a one-task
+    # schema-inference job over the files just written
+    return df.sparkSession.read.schema(df.schema).parquet(path)

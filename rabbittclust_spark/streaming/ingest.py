@@ -25,8 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from rabbittclust_spark.config import PipelineConfig
+from rabbittclust_spark.operators.sketch import _SKETCH_SCHEMA
 
-_SKETCH_SCHEMA = "doc_id long, len long, n int, sig array<long>"
 _ASSIGN_SCHEMA = "doc_id long, cluster_id long"
 _POINTER = "STATE.json"
 
@@ -65,8 +65,12 @@ class StreamingDedup:
             return (self.spark.createDataFrame([], _SKETCH_SCHEMA),
                     self.spark.createDataFrame([], _ASSIGN_SCHEMA))
         base = os.path.join(self.state_root, f"v{v}")
-        return (self.spark.read.parquet(os.path.join(base, "sketches")),
-                self.spark.read.parquet(os.path.join(base, "assignments")))
+        # the state is written with exactly these schemas; passing them
+        # skips Spark's schema-inference job on every load
+        return (self.spark.read.schema(_SKETCH_SCHEMA)
+                .parquet(os.path.join(base, "sketches")),
+                self.spark.read.schema(_ASSIGN_SCHEMA)
+                .parquet(os.path.join(base, "assignments")))
 
     def assignments(self) -> DataFrame:
         return self.load_state()[1]
