@@ -44,6 +44,7 @@ from rabbittclust_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_dedup,
 )
+from rabbittclust_spark.operators.pairs import posting_pairs
 from rabbittclust_spark.operators.postprocess import cluster_stats
 from rabbittclust_spark.sources.tables import load_table
 
@@ -173,22 +174,17 @@ def _token_postings(spark, sf_dir, spread=True):
 
 def _posting_pair_counts(postings, key_col: str, min_common: int):
     """(doc_id, source, <key_col>) DISTINCT posting rows ->
-    (src, dst, n1, n2, common): the source-blocked inverted-index self-join +
-    per-doc sizes shared by every token sketch twin (the SQL-expressible
-    shape of pair_counts_index, src/MST.cpp:399-575)."""
+    (src, dst, n1, n2, common): the source-blocked uncapped counting shape of
+    pairs.posting_pairs + per-doc sizes, shared by every token sketch twin
+    (the SQL-expressible shape of pair_counts_index, src/MST.cpp:399-575)."""
     sizes = postings.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = postings.alias("a"), postings.alias("b")
     return (
-        a.join(b, (F.col(f"a.{key_col}") == F.col(f"b.{key_col}")) &
-               (F.col("a.source") == F.col("b.source")))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .agg(F.count("*").alias("common"))
+        posting_pairs(postings, [key_col, "source"],
+                      PipelineConfig(max_posting=None), "token")
         .where(F.col("common") >= min_common)
-        .join(sizes.withColumnRenamed("doc_id", "src")
-                   .withColumnRenamed("n", "n1"), "src")
-        .join(sizes.withColumnRenamed("doc_id", "dst")
-                   .withColumnRenamed("n", "n2"), "dst")
+        .join(sizes.toDF("src", "n1"), "src")
+        .join(sizes.toDF("dst", "n2"), "dst")
+        .select("src", "dst", "n1", "n2", "common")
     )
 
 

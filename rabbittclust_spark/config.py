@@ -95,10 +95,11 @@ class PipelineConfig:
                                   # production paths: capping IS the behavior.
     hot_hash_mode: str = "star"   # what happens to postings above max_posting:
                                   # "star" = escalate via anchor-star candidate
-                                  # pairs (min-doc anchor linked to every other
-                                  # posting, O(p) extra candidates, exact
-                                  # verify downstream — recovers CC recall for
-                                  # hot near-dup groups) | "drop" = reference
+                                  # pairs (STAR_ANCHORS salted-hash anchors
+                                  # each linked to every other posting, O(p)
+                                  # extra candidates, exact verify downstream
+                                  # — recovers CC recall for hot near-dup
+                                  # groups) | "drop" = reference
                                   # behavior (silently skip the hash).  Either
                                   # way the dropped/escalated hash and doc
                                   # counts are logged (no silent caps).

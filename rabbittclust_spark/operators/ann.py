@@ -251,9 +251,10 @@ def _apply_bucket_cap(keyed: DataFrame, max_bucket: int | None,
     star keeps candidate volume O(N * tables) instead of O(N^2 / 2^planes)
     (measured: 101k random 64-d vectors at num_planes=8 emit 160M candidate
     rows and spill >50 GB through the vector-payload verify join).
-    Hot buckets escalate via anchor-star exactly like hot hashes: the
-    min-vec anchor links to every member, exact cosine verify decides, CC
-    consumers recover dense near-dup groups transitively.  Dropped/escalated
+    Hot buckets escalate via anchor-star exactly like hot hashes: each of
+    up to STAR_ANCHORS salted-hash anchors links to every member, exact
+    cosine verify decides, CC consumers recover dense near-dup groups
+    transitively.  Dropped/escalated
     bucket counts are logged — no silent caps."""
     if max_bucket is None:
         return keyed, None
@@ -329,7 +330,7 @@ def embedding_neardup_lsh(embeddings: DataFrame, tau: float, dim: int,
             .select(F.col("a.vec_id").alias("src"),
                     F.col("b.vec_id").alias("dst")))
     # r9: one fused distinct over raw-pairs ∪ star (identical set, one fewer
-    # shuffle when the bucket cap escalates — see pairs.candidate_pairs_banded)
+    # shuffle when the bucket cap escalates — see pairs.posting_pairs)
     if star is not None:
         cand = cand.union(star)
     cand = cand.distinct()

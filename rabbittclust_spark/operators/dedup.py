@@ -9,9 +9,15 @@ components -> assignments machinery:
 - SimHash          Charikar blocks as LSH keys, Hamming verify
 - n-gram Jaccard   token-shingle set similarity (SQL-expressible; oracle-checked)
 - embedding cosine see operators/ann.py
+
+The SimHash, n-gram and weighted-MinHash pairs come from the one posting
+self-join (pairs.posting_pairs); each family keeps only its own exact
+verification or count-based score.
 """
 
 from __future__ import annotations
+
+import dataclasses
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -19,7 +25,7 @@ from pyspark.sql import functions as F
 from rabbittclust_spark.config import PipelineConfig
 from rabbittclust_spark.functions.simhash import simhash_block_exprs
 from rabbittclust_spark.operators.components import connected_components
-from rabbittclust_spark.operators.pairs import build_edges
+from rabbittclust_spark.operators.pairs import build_edges, posting_pairs
 from rabbittclust_spark.operators.postprocess import assignments_from_components
 from rabbittclust_spark.operators.sketch import (
     sketch_minhash,
@@ -184,43 +190,26 @@ def simhash_edges(docs: DataFrame, cfg: PipelineConfig,
     keyed = _spread_for_cpu_kernel(sh).select(
         "doc_id", "simhash",
         F.explode(simhash_block_exprs(F.col("simhash"), num_blocks)).alias("bk"))
+
+    def hamming(x, y):
+        return F.bit_count(x.bitwiseXOR(y))
+
     # block-key skew cap: a block value shared by p docs (identical
     # boilerplate fingerprint regions at web scale) emits ~p^2/2 join rows;
-    # same --max-posting budget + anchor-star escalation as the MinHash
-    # postings — the pigeonhole recall-1.0 guarantee survives for hot
-    # groups whose members are within hamming_max of the anchor (the
-    # identical/near-identical fingerprint case the cap exists for),
-    # recovered transitively by the CC consumer
-    from rabbittclust_spark.operators.pairs import _apply_posting_cap
-    keyed, star = _apply_posting_cap(keyed, "bk", cfg, "simhash")
-    a, b = keyed.alias("a"), keyed.alias("b")
-    edges = (
-        a.join(b, F.col("a.bk") == F.col("b.bk"))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("src"),
-            F.col("b.doc_id").alias("dst"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= cfg.simhash_hamming_max)
-        .distinct()
-    )
-    if star is not None:
-        # escalated hot-block candidates re-join the (8-byte) fingerprints
-        # for the same exact hamming verification
-        sv = sh.select("doc_id", "simhash")
-        star_edges = (
-            star.join(sv.select(F.col("doc_id").alias("src"),
-                                F.col("simhash").alias("_sa")), "src")
-            .join(sv.select(F.col("doc_id").alias("dst"),
-                            F.col("simhash").alias("_sb")), "dst")
-            .select("src", "dst",
-                    F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-                    .alias("hamming"))
-            .where(F.col("hamming") <= cfg.simhash_hamming_max)
-        )
-        edges = edges.union(star_edges).distinct()
-    return edges
+    # posting_pairs escalates it to anchor-star candidates — the pigeonhole
+    # recall-1.0 guarantee survives for hot groups whose members are within
+    # hamming_max of an anchor (the identical/near-identical fingerprint case
+    # the cap exists for), recovered transitively by the CC consumer.  The
+    # hamming bound prunes the block-join rows before the pair dedup (most
+    # candidates fail it), and verifies every pair, star pairs included,
+    # from the fingerprints the pairs carry
+    pairs = posting_pairs(
+        keyed, "bk", cfg, "simhash",
+        prune=("simhash",
+               lambda x, y: hamming(x, y) <= cfg.simhash_hamming_max))
+    return (pairs.select("src", "dst", hamming(F.col("v1"), F.col("v2"))
+                         .alias("hamming"))
+            .where(F.col("hamming") <= cfg.simhash_hamming_max))
 
 
 def simhash_dedup(docs: DataFrame, cfg: PipelineConfig,
@@ -291,28 +280,15 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard: float = 0.2,
     # false-positive dup pair), the opposite of the precision-safe
     # underestimate the capped reference index guarantees
     sizes = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
-    # hot-gram cap (reference --max-posting semantics, drop mode — this is
-    # a COUNTING join, so star escalation cannot apply; dropped grams
-    # underestimate `common` for pairs sharing them, exactly like the
-    # reference's capped inverted index).  Never fires at oracle scale.
-    if max_posting is not None:
-        import dataclasses
-
-        from rabbittclust_spark.config import PipelineConfig
-        from rabbittclust_spark.operators.pairs import _apply_posting_cap
-
-        g, _ = _apply_posting_cap(
-            g, "gram",
-            dataclasses.replace(PipelineConfig(), max_posting=max_posting),
-            "ngram", allow_star=False)
-    a, b = g.alias("a"), g.alias("b")
-    cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in join_cond]
-    pairs = (
-        a.join(b, cond)
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .agg(F.count("*").alias("common"))
-    )
+    # hot-gram cap per join group (reference --max-posting semantics, drop
+    # mode — this is a COUNTING join, so star escalation cannot apply;
+    # dropped grams underestimate `common` for pairs sharing them, exactly
+    # like the reference's capped inverted index).  Never fires at oracle
+    # scale.
+    pairs = posting_pairs(
+        g, join_cond, dataclasses.replace(PipelineConfig(),
+                                          max_posting=max_posting),
+        "ngram", star=False)
     j = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
     out = (
         pairs.join(sizes.withColumnRenamed("doc_id", "src")
@@ -360,43 +336,29 @@ def wminhash_pairs(docs: DataFrame, cfg: PipelineConfig, num_samples: int = 128,
     post = _spread_for_cpu_kernel(sk).select(
         "doc_id", F.posexplode("sig").alias("pos", "key"))
     # hot-(pos,key) cap: identical/boilerplate docs agree at EVERY position,
-    # so one (pos, sample) group of p docs emits ~p^2/2 join rows.  The cap
-    # bookkeeping runs on a combined 64-bit key (xxhash64 collisions would
-    # only over-drop an innocent group — logged, negligible).  The counting
-    # join itself runs in drop semantics (agree underestimates for pairs
+    # so one (pos, sample) group of p docs emits ~p^2/2 join rows.  The
+    # counted agreement runs in drop semantics (it underestimates for pairs
     # sharing capped positions, like the reference's capped index), but hot
     # keys ALSO emit anchor-star candidates whose agreement is computed
     # EXACTLY from the full signatures below — without that, a group of
     # more than max_posting near-identical docs has every position hot,
     # loses every posting row, and silently reports zero pairs (the recall
     # cliff the MinHash path's escalation already guards against).
-    post = post.withColumn("_pk", F.xxhash64("pos", "key"))
-    from rabbittclust_spark.operators.pairs import _apply_posting_cap
-    post, star = _apply_posting_cap(post, "_pk", cfg, "wminhash")
-    a, b = post.alias("a"), post.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.pos") == F.col("b.pos")) &
-               (F.col("a.key") == F.col("b.key")))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .agg(F.count("*").alias("agree"))
-    )
-    if star is not None:
-        # exact sig-zip agreement for escalated candidates: positional
-        # equality over the two full signatures (JVM zip_with, no Python);
-        # exact >= the capped join's undercount, so max() per pair keeps it
-        sigs = sk.select("doc_id", "sig")
-        star_pairs = (
-            star.join(sigs.select(F.col("doc_id").alias("src"),
-                                  F.col("sig").alias("_s1")), "src")
-            .join(sigs.select(F.col("doc_id").alias("dst"),
-                              F.col("sig").alias("_s2")), "dst")
-            .select("src", "dst",
-                    F.size(F.filter(F.zip_with("_s1", "_s2",
-                                               lambda x, y: x == y),
-                                    lambda m: m)).alias("agree")))
-        pairs = (pairs.unionByName(star_pairs)
-                 .groupBy("src", "dst").agg(F.max("agree").alias("agree")))
+    pairs = posting_pairs(post, ["pos", "key"], cfg, "wminhash")
+    # exact sig-zip agreement for star candidates: positional equality over
+    # the two full signatures (JVM zip_with, no Python); it is >= the capped
+    # count, which stays the agreement of every other pair
+    sigs = sk.select("doc_id", "sig")
+    star_pairs = (
+        pairs.where("star")
+        .join(sigs.toDF("src", "_s1"), "src")
+        .join(sigs.toDF("dst", "_s2"), "dst")
+        .select("src", "dst",
+                F.size(F.filter(F.zip_with("_s1", "_s2", lambda x, y: x == y),
+                                lambda m: m)).alias("agree")))
+    pairs = (pairs.where(~F.col("star"))
+             .select("src", "dst", F.col("common").alias("agree"))
+             .unionByName(star_pairs))
     est = F.col("agree") / F.lit(float(num_samples))
     return (pairs.where(est >= min_wjaccard)
             .select("src", "dst", "agree", F.round(est, 6).alias("wjaccard_est")))

@@ -1,6 +1,27 @@
 """Candidate-pair generation + distance evaluation -> edges DataFrame.
 
-Three modes (``cfg.pair_mode``):
+Every posting self-join of the engine goes through ``posting_pairs``: the
+DataFrame form of the reference's inverted-index posting-list self-join +
+epoch-stamped intersection counting (src/MST.cpp:399-575,
+src/SketchInfo.h:59-161).  It owns the hot-key cap (the --max-posting analog,
+src/dbscan.cpp:95-220, with logged counts), star escalation, the src < dst
+orientation, the optional pre-aggregate prune and the one aggregate.  It
+serves two shapes:
+
+- *candidate*, then exact verify: hot keys are ESCALATED via anchor-star
+  candidates (cfg.hot_hash_mode, see _apply_posting_cap), and the caller
+  verifies exactly — ``array_intersect`` of the bottom-s sketches here,
+  hamming for SimHash, ``zip_with`` agreement for WMinHash.  Star recovery
+  relies on CC transitivity through an anchor: it is lossless for hot groups
+  whose members are near-dups of an anchor (the boilerplate case the cap
+  exists for); a pair sharing ONLY hot hashes whose members both fail exact
+  verification against every anchor is still lost, exactly like drop mode.
+- *counting*, drop mode: the per-pair count of shared keys IS the
+  intersection (src/MST.cpp:428-487) — index mode, n-gram Jaccard,
+  substring containment and the token-graph family.  Hot keys are dropped
+  like the reference, which underestimates ``common``.
+
+The MinHash edges come in three modes (``cfg.pair_mode``):
 
 **probe** (default): each doc's bottom-``probe_hashes`` sketch values are
 its probes; docs sharing a probe (at least ``min_probe_common`` of them) are
@@ -10,21 +31,10 @@ incremental append: given ``settled`` sketches (docs whose pairs among
 themselves are known — the reference's start index, src/MST.cpp:391-400),
 it builds only the pairs touching a doc of ``sketches``.
 
-**index** (reference-parity): explode sketch hash values and self-join on the
-hash — the DataFrame form of the reference's inverted-index posting-list
-self-join + epoch-stamped intersection counting (src/MST.cpp:399-575,
-src/SketchInfo.h:59-161).  groupBy(src,dst).count() IS the per-pair
-intersection count (src/MST.cpp:428-487).  Pruning predicates are applied in
-reference order: size-ratio before the aggregate consumer
-(src/MST.cpp:504-512), common-count lower bound as HAVING
-(src/greedy.cpp:649-653).  Hot-hash skew is handled by the --max-posting
-analog (src/dbscan.cpp:95-220) with logged counts; in probe/banded modes hot
-keys can additionally be ESCALATED via anchor-star candidates instead of
-dropped (cfg.hot_hash_mode, see _apply_posting_cap).  Star recovery relies on
-CC transitivity through the anchor: it is lossless for hot groups whose
-members are mutual near-dups of the anchor (the boilerplate case the cap
-exists for); a pair sharing ONLY hot hashes whose members both fail exact
-verification against the anchor is still lost, exactly like drop mode.
+**index** (reference-parity): counting shape over every sketch hash.
+Pruning predicates are applied in reference order: size-ratio before the
+aggregate consumer (src/MST.cpp:504-512), common-count lower bound as HAVING
+(src/greedy.cpp:649-653).
 
 **banded** (scale path): join on LSH band keys from the k-permutation
 signature — O(candidate pairs) instead of O(sum posting^2) — then verify each
@@ -39,7 +49,10 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+from functools import partial
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rabbittclust_spark.config import PipelineConfig
@@ -72,38 +85,53 @@ HOT_KEY_COLLECT_LIMIT = 100_000
 STAR_ANCHORS = 3
 
 
-def _apply_posting_cap(postings: DataFrame, key: str, cfg: PipelineConfig,
-                       label: str, allow_star: bool = True,
-                       doc_col: str = "doc_id"
+def _oriented(x: Column, y: Column, vx: Column | None = None,
+              vy: Column | None = None) -> list[Column]:
+    """src = the smaller, dst = the larger of two doc ids, and with values
+    v1 = src's, v2 = dst's."""
+    cols = [F.least(x, y).alias("src"), F.greatest(x, y).alias("dst")]
+    if vx is not None:
+        cols += [F.when(x < y, vx).otherwise(vy).alias("v1"),
+                 F.when(x < y, vy).otherwise(vx).alias("v2")]
+    return cols
+
+
+def _apply_posting_cap(postings: DataFrame, keys: str | list[str],
+                       cfg: PipelineConfig, label: str, allow_star: bool = True,
+                       doc_col: str = "doc_id", value: str | None = None
                        ) -> tuple[DataFrame, DataFrame | None]:
     """--max-posting analog with accounting and optional escalation.
 
-    Splits posting rows into cold (below-cap) and hot (above-cap) keys.  The
+    Splits posting rows into cold (below-cap) and hot (above-cap) groups of
+    ``keys`` (one column name or a list: the join's real group).  The
     reference silently drops hot hashes from its index
     (src/dbscan.cpp:95-220); here the dropped/escalated key and posting
     counts are always LOGGED, and with ``cfg.hot_hash_mode == "star"`` hot
     keys are escalated instead of lost: every posting of a hot key is paired
-    with the key's minimum doc_id (anchor) — O(p) extra candidates per hot
-    key instead of the O(p^2) explosion — and those candidates flow through
-    the same exact array_intersect verification as everything else.  For hot
-    groups of true near-duplicates the anchor links verify and connected
-    components recovers the full group (no recall loss; tested with a
-    hot-key fixture), versus drop mode's silent loss of pairs that only
-    share capped hashes.  Caveat (see module docstring): a hot-only pair
-    whose members are NOT both near-dups of the anchor stays lost — the
-    guarantee covers mutual near-dup groups, not arbitrary hot pairs.
+    with up to STAR_ANCHORS anchors, the members minimizing a salted hash of
+    their id — O(p) extra candidates per hot key instead of the O(p^2)
+    explosion — and those candidates flow through the same exact
+    verification as everything else.  For hot groups of true near-duplicates
+    the anchor links verify and connected components recovers the full group
+    (no recall loss; tested with a hot-key fixture), versus drop mode's
+    silent loss of pairs that only share capped hashes.  Caveat (see module
+    docstring): a hot-only pair whose members are NOT near-dups of an anchor
+    stays lost — the guarantee covers mutual near-dup groups, not arbitrary
+    hot pairs.
 
-    Returns (cold_postings, star_candidates(src, dst) | None).
+    Returns (cold_postings, star_candidates(src, dst[, v1, v2]) | None):
+    each anchor carries its per-doc ``value``, so a star pair has both.
     """
     if cfg.max_posting is None:
         return postings, None
+    keys = [keys] if isinstance(keys, str) else list(keys)
 
-    counts = postings.groupBy(key).agg(F.count("*").alias("_pl"))
+    counts = postings.groupBy(*keys).agg(F.count("*").alias("_pl"))
     hot_counts = counts.where(F.col("_pl") > cfg.max_posting)
     # ONE job decides both the common case (nothing hot -> empty collect)
     # and the normal hot case (keys + counts in the same collect, bounded
-    # by the limit) — this path runs on EVERY probe/index/banded build, so
-    # its cost must stay at a single aggregation; only an adversarial
+    # by the limit) — this path runs on EVERY posting-pair build, so its
+    # cost must stay at a single aggregation; only an adversarial
     # above-limit hot set pays extra jobs
     hot_rows = hot_counts.limit(HOT_KEY_COLLECT_LIMIT + 1).collect()
     if not hot_rows:
@@ -124,7 +152,8 @@ def _apply_posting_cap(postings: DataFrame, key: str, cfg: PipelineConfig,
         n_hot = len(hot_rows)
         n_post = sum(int(r["_pl"]) for r in hot_rows)
         hot = F.broadcast(postings.sparkSession.createDataFrame(
-            [(r[key],) for r in hot_rows], schema=counts.select(key).schema))
+            [tuple(r[k] for k in keys) for r in hot_rows],
+            schema=counts.select(*keys).schema))
     else:
         # adversarial hot set: true totals for the log, then keep the key
         # table distributed — parquet-materialize it (both the anti-join
@@ -135,16 +164,16 @@ def _apply_posting_cap(postings: DataFrame, key: str, cfg: PipelineConfig,
             F.coalesce(F.sum("_pl"), F.lit(0)).alias("np")).collect()[0]
         n_hot, n_post = int(agg["nh"]), int(agg["np"])
         from rabbittclust_spark.sources.tables import materialize
-        hot = materialize(hot_counts.select(key), "hot_keys")
+        hot = materialize(hot_counts.select(*keys), "hot_keys")
     _LOG.warning(
         "max_posting=%d [%s]: %d hot keys covering %d postings %s",
         cfg.max_posting, label, n_hot, n_post,
         "escalated via anchor-star candidates" if star_mode
         else "DROPPED (reference --max-posting behavior)")
-    cold = postings.join(hot, key, "left_anti")
+    cold = postings.join(hot, keys, "left_anti")
     if not star_mode:
         return cold, None
-    hot_postings = postings.join(hot, key)
+    hot_postings = postings.join(hot, keys)
     # STAR_ANCHORS pseudo-random anchors per hot key: anchor i = the member
     # minimizing a salt-i hash of its id.  min(struct) is a map-side
     # combinable aggregate (no per-key sort, no single-task skew on a huge
@@ -152,68 +181,111 @@ def _apply_posting_cap(postings: DataFrame, key: str, cfg: PipelineConfig,
     # Min-ID anchoring was measured failing here: when an unrelated low-id
     # doc shares the hot key, it captures the anchor role and exact verify
     # kills every star pair, silently dropping the genuine dup group.
-    anchors = hot_postings.groupBy(key).agg(*[
+    val = [] if value is None else [F.col(value).alias("v")]
+    anchors = hot_postings.groupBy(*keys).agg(*[
         F.min(F.struct(F.xxhash64(doc_col, F.lit(i)).alias("h"),
-                       F.col(doc_col).alias("d"))).alias(f"_a{i}")
+                       F.col(doc_col).alias("d"), *val)).alias(f"_a{i}")
         for i in range(STAR_ANCHORS)])
-    anchors = anchors.select(
-        key, F.explode(F.array_distinct(F.array(
-            *[F.col(f"_a{i}.d") for i in range(STAR_ANCHORS)]))).alias("_anchor"))
+    anchors = anchors.select(*keys, F.explode(F.array_distinct(F.array(*[
+        F.col(f"_a{i}").dropFields("h") for i in range(STAR_ANCHORS)])))
+        .alias("_anchor"))
+    doc, anchor = F.col(doc_col), F.col("_anchor.d")
+    values = [] if value is None else [F.col(value), F.col("_anchor.v")]
     star = (
-        hot_postings.join(anchors, key)
-        .where(F.col(doc_col) != F.col("_anchor"))
-        .select(F.least(doc_col, "_anchor").alias("src"),
-                F.greatest(doc_col, "_anchor").alias("dst"))
+        hot_postings.join(anchors, keys)
+        .where(doc != anchor)
+        .select(*_oriented(doc, anchor, *values))
         .distinct()
     )
     return cold, star
 
 
-def explode_postings(sketches: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """sketches(doc_id, n, sig) -> postings(h, doc_id, n).
+def posting_pairs(postings: DataFrame, keys: str | list[str],
+                  cfg: PipelineConfig, label: str, *, star: bool = True,
+                  prune: tuple[str, Callable[[Column, Column], Column]]
+                  | None = None,
+                  settled: DataFrame | None = None) -> DataFrame:
+    """(doc_id, *keys[, value]) posting rows -> one row per doc pair sharing
+    a key: (src, dst, common, star[, v1, v2]) with src < dst.
 
-    The lazily-fused DataFrame form of the reference's pipelined
-    sketch+index build (src/SketchInfo.cpp:1216-1229).
+    ``common`` counts the
+    shared COLD keys (``cfg.max_posting`` groups; drop-mode semantics, like
+    the reference's capped index).  ``star`` marks a pair that is an anchor
+    candidate of a hot key; it is only ever true when ``star`` is passed
+    and ``cfg.hot_hash_mode == "star"`` (see _apply_posting_cap), and such
+    a pair needs an exact verify.
+
+    ``prune=(value, pred)`` names a per-doc column and a predicate over two
+    docs' values: cold join rows failing ``pred(a, b)`` are pruned before
+    the aggregate (the size-ratio prune, src/MST.cpp:504-512; the SimHash
+    hamming bound), and every pair, star pairs included, returns src's and
+    dst's values as v1 and v2.
+
+    ``settled`` is the append form (the reference's start index,
+    src/MST.cpp:391-400): posting rows of docs whose pairs among themselves
+    are already known.  The cap counts both sides; only pairs touching a
+    doc of ``postings`` are built.
+
+    Candidate callers ``.select("src", "dst")``: Catalyst then prunes the
+    aggregate to a plain distinct over cold pairs ∪ star pairs (one shuffle).
     """
-    postings = sketches.select(
-        F.explode("sig").alias("h"), F.col("doc_id"), F.col("n")
-    )
-    # --max-posting analog (src/dbscan.cpp:95-220) with logged counts.
-    # Index mode aggregates shared-hash COUNTS, so star escalation (which
-    # yields candidates, not counts) cannot apply here — hot hashes are
-    # dropped exactly like the reference; probe/banded modes escalate.
-    postings, _ = _apply_posting_cap(postings, "h", cfg, "index",
-                                     allow_star=False)
-    return postings
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    value, pred = prune if prune is not None else (None, None)
+    rows = postings
+    if settled is not None:
+        rows = settled.withColumn("_new", F.lit(False)).unionByName(
+            postings.withColumn("_new", F.lit(True)))
+    cold, star_pairs = _apply_posting_cap(rows, keys, cfg, label,
+                                          allow_star=star, value=value)
+    a = cold.where("_new") if settled is not None else cold
+    ida, idb = F.col("a.doc_id"), F.col("b.doc_id")
+    joined = a.alias("a").join(
+        cold.alias("b"), [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys])
+    if settled is None:
+        joined = joined.where(ida < idb)
+    else:
+        # a new x new pair is met from both sides: keep its a < b
+        # orientation; a new x settled pair is met once, in either order
+        joined = joined.where((ida < idb)
+                              | (~F.col("b._new") & (ida != idb)))
+    values = ()
+    if value is not None:
+        values = F.col(f"a.{value}"), F.col(f"b.{value}")
+        joined = joined.where(pred(*values))
+    # one aggregate dedups or counts: `common` counts the marker, which only
+    # the cold rows carry
+    pairs = joined.select(*_oriented(ida, idb, *values), F.lit(1).alias("_m"))
+    aggs = [F.count("_m").alias("common")] + [
+        F.max(c).alias(c) for c in ("v1", "v2") if value is not None]
+    if star_pairs is None:
+        return (pairs.groupBy("src", "dst").agg(*aggs)
+                .withColumn("star", F.lit(False)))
+    if settled is not None:
+        # settled x settled pairs are already known
+        new_ids = postings.select("doc_id")
+        star_pairs = star_pairs.join(new_ids.toDF("src"), "src", "left_semi") \
+            .unionByName(star_pairs.join(new_ids.toDF("dst"), "dst", "left_semi"))
+    pairs = pairs.withColumn("star", F.lit(False)).unionByName(
+        star_pairs.withColumn("star", F.lit(True)), allowMissingColumns=True)
+    return pairs.groupBy("src", "dst").agg(*aggs, F.max("star").alias("star"))
 
 
 def pair_counts_index(sketches: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Inverted-index pair generation: (src, dst, n1, n2, common).
 
     src < dst dedup mirrors the reference's j<i convention
-    (src/MST.cpp:446-455).
+    (src/MST.cpp:446-455).  Index mode aggregates shared-hash COUNTS, so
+    star escalation (which yields candidates, not counts) cannot apply
+    here — hot hashes are dropped exactly like the reference.
     """
-    p = explode_postings(sketches, cfg)
-    a = p.alias("a")
-    b = p.alias("b")
-    joined = (
-        a.join(b, F.col("a.h") == F.col("b.h"))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("src"),
-            F.col("b.doc_id").alias("dst"),
-            F.col("a.n").alias("n1"),
-            F.col("b.n").alias("n2"),
-        )
-    )
-    # size-ratio pruning BEFORE the aggregate (src/MST.cpp:504-512); Catalyst
-    # pushes this below the shuffle for the groupBy.
-    joined = joined.where(size_ratio_pred(F.col("n1"), F.col("n2"), cfg.max_size_ratio()))
-    pairs = joined.groupBy("src", "dst", "n1", "n2").agg(F.count("*").alias("common"))
+    postings = sketches.select(F.explode("sig").alias("h"), "doc_id", "n")
+    pairs = posting_pairs(postings, "h", cfg, "index", star=False, prune=(
+        "n", partial(size_ratio_pred, max_ratio=cfg.max_size_ratio())))
     # HAVING common >= lower bound (src/greedy.cpp:649-653)
     return pairs.where(
-        F.col("common") >= common_lower_bound_expr(F.col("n1"), F.col("n2"), cfg.jaccard_min())
-    )
+        F.col("common") >= common_lower_bound_expr(F.col("v1"), F.col("v2"), cfg.jaccard_min())
+    ).select("src", "dst", F.col("v1").alias("n1"), F.col("v2").alias("n2"),
+             "common")
 
 
 def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig,
@@ -226,10 +298,11 @@ def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig,
     probability is ~(1-J)^B — at B=32 and the d=0.05 boundary (J=0.212)
     that is 4.9e-4, inside the recall>=0.99 budget (real dup pairs sit well
     above the boundary: J=0.4 -> 8.6e-8).  With ``cfg.min_probe_common > 1``
-    a candidate must share that many cold probes.  Verification computes the
-    EXACT intersection count via JVM array_intersect (the reference's
-    sorted-array merge intersection, src/greedy.cpp:39-67), so distances are
-    identical to index mode; only candidate discovery is probabilistic.
+    a candidate must share that many cold probes (or be a star candidate).
+    Verification computes the EXACT intersection count via JVM
+    array_intersect (the reference's sorted-array merge intersection,
+    src/greedy.cpp:39-67), so distances are identical to index mode; only
+    candidate discovery is probabilistic.
 
     ``settled`` is the append form (the reference's start index,
     src/MST.cpp:391-400): sketches of docs whose pairs among themselves are
@@ -243,8 +316,8 @@ def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig,
     """
     b = int(cfg.probe_hashes)
 
-    def probes(sk: DataFrame, new: bool) -> DataFrame:
-        return sk.select(F.col("doc_id"), F.col("n"), F.lit(new).alias("new"),
+    def probes(sk: DataFrame) -> DataFrame:
+        return sk.select(F.col("doc_id"), F.col("n"),
                          F.explode(F.slice("sig", 1, b)).alias("h"))
 
     # r9: the sketch barrier is a few small files at bench scale, so the
@@ -255,53 +328,26 @@ def pair_counts_probe(sketches: DataFrame, cfg: PipelineConfig,
     # through untouched)
     from rabbittclust_spark.operators.sketch import _spread_for_cpu_kernel
     sketches = sketches.select("doc_id", "n", "sig")
-    probed = probes(_spread_for_cpu_kernel(sketches), True)
     docs = sketches
     if settled is not None:
-        probed = probes(settled, False).unionByName(probed)
-        docs = settled.select("doc_id", "n", "sig").unionByName(sketches)
-    probed, star = _apply_posting_cap(
-        probed, "h", cfg, "probe" if settled is None else "append")
-    pa, pb = probed.where("new").alias("a"), probed.alias("b")
-    matched = (
-        pa.join(pb, F.col("a.h") == F.col("b.h"))
-        # one row per (pair, shared probe): a new x new pair is met from both
-        # sides, so keep only its a < b orientation.  With settled=None every
-        # row is new and this folds to a.doc_id < b.doc_id
-        .where((F.col("a.doc_id") < F.col("b.doc_id"))
-               | (~F.col("b.new") & (F.col("a.doc_id") != F.col("b.doc_id"))))
-        .where(size_ratio_pred(F.col("a.n"), F.col("b.n"), cfg.max_size_ratio()))
-        .select(F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("src"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("dst"))
-    )
+        settled = settled.select("doc_id", "n", "sig")
+        docs = settled.unionByName(sketches)
+    pairs = posting_pairs(
+        probes(_spread_for_cpu_kernel(sketches)), "h", cfg,
+        "probe" if settled is None else "append",
+        prune=("n", partial(size_ratio_pred, max_ratio=cfg.max_size_ratio())),
+        settled=None if settled is None else probes(settled))
     if cfg.min_probe_common > 1:
         # scale lever for common-phrase-dense corpora (see config.py): most
         # ACCIDENTAL candidates share exactly one probe hash, while real dup
         # pairs share many — the count is a map-side-combinable 16-byte-row
         # aggregate, vastly cheaper than shipping two full sketches per
-        # candidate through the verify join it gates
-        matched = (matched.groupBy("src", "dst")
-                   .agg(F.count("*").alias("_pc"))
-                   .where(F.col("_pc") >= cfg.min_probe_common)
-                   .select("src", "dst"))
-    if star is None:
-        cand = matched if cfg.min_probe_common > 1 else matched.distinct()
-    else:
-        if settled is not None:
-            # settled x settled pairs are already known: keep the star
-            # candidates touching >= 1 new doc
-            new_ids = sketches.select("doc_id")
-            star = (star.join(new_ids.withColumnRenamed("doc_id", "src"),
-                              "src", "left_semi")
-                    .unionByName(star.join(
-                        new_ids.withColumnRenamed("doc_id", "dst"),
-                        "dst", "left_semi")))
-        # escalated hot-hash candidates verify exactly like the others; the
-        # size-ratio pred is skipped for them, which is safe — ratio-violating
-        # pairs mathematically cannot pass the common-count/threshold filters.
-        # r9: ONE distinct over the union (see candidate_pairs_banded) —
-        # identical pair set, one shuffle instead of two when the cap escalates
-        cand = matched.union(star).distinct()
+        # candidate through the verify join it gates.  Star candidates skip
+        # the gate (and the size-ratio prune), which is safe: ratio-violating
+        # pairs mathematically cannot pass the common-count/threshold filters
+        pairs = pairs.where((F.col("common") >= cfg.min_probe_common)
+                            | F.col("star"))
+    cand = pairs.select("src", "dst")
     from rabbittclust_spark.sources.tables import materialize
     if settled is None:
         # materialize the candidate set: splits the query at its natural
@@ -366,22 +412,7 @@ def candidate_pairs_banded(bands: DataFrame, cfg: PipelineConfig) -> DataFrame:
     from rabbittclust_spark.operators.sketch import _spread_for_cpu_kernel
     exploded = _spread_for_cpu_kernel(bands).select(
         F.col("doc_id"), F.explode("band_keys").alias("bk"))
-    exploded, star = _apply_posting_cap(exploded, "bk", cfg, "banded")
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    cand = (
-        a.join(b, F.col("a.bk") == F.col("b.bk"))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-    )
-    # r9: ONE distinct over raw-pairs ∪ star — distinct(A ∪ B) ==
-    # distinct(distinct(A) ∪ B), and the fused form shuffles the raw pair
-    # set once instead of raw + deduped (the md5-token twin's hot-band case
-    # re-shuffled ~1.6M deduped pairs a second time).  star=None keeps the
-    # exact previous plan.
-    if star is not None:
-        cand = cand.union(star)
-    return cand.distinct()
+    return posting_pairs(exploded, "bk", cfg, "banded").select("src", "dst")
 
 
 def pair_counts_banded(sketches: DataFrame, bands: DataFrame,

@@ -1,11 +1,11 @@
 """Exact-substring duplicate detection via winnowing fingerprints.
 
 Pipeline shape mirrors the other signature families: sketch (mapInPandas)
--> explode fingerprints -> self-join -> per-pair shared count ->
-containment score -> threshold -> edges -> (optionally) connected
-components.  The shared-fingerprint lower bound guarantees recall 1.0 for
-exact shared substrings of length >= window + k - 1
-(functions/winnowing.py).
+-> explode fingerprints -> pairs.posting_pairs (the shared posting
+self-join, counting shape) -> per-pair shared count -> containment score ->
+threshold -> edges -> (optionally) connected components.  The
+shared-fingerprint lower bound guarantees recall 1.0 for exact shared
+substrings of length >= window + k - 1 (functions/winnowing.py).
 """
 
 from __future__ import annotations
@@ -54,26 +54,23 @@ def substring_pairs(fp_sketches: DataFrame, cfg: PipelineConfig,
     containment = shared / min(n_fp) — fraction of the shorter document's
     fingerprints covered (1.0 for a verbatim prefix/slice copy).
     """
+    from rabbittclust_spark.operators.pairs import posting_pairs
     from rabbittclust_spark.sources.tables import materialize
-
-    from rabbittclust_spark.operators.pairs import _apply_posting_cap
 
     # r9: spread the barrier read-back before the explode so the posting
     # self-join doesn't inherit a 1-2 file scan (see pairs.pair_counts_probe)
     from rabbittclust_spark.operators.sketch import _spread_for_cpu_kernel
     postings = _spread_for_cpu_kernel(fp_sketches).select(
-        "doc_id", "n_fp", F.explode("fp").alias("h"))
-    # count-aggregation path: drop-with-logging like index mode
-    postings, _ = _apply_posting_cap(postings, "h", cfg, "substring",
-                                     allow_star=False)
-    a, b = postings.alias("a"), postings.alias("b")
+        "doc_id", F.explode("fp").alias("h"))
+    # counting shape: hot fingerprints drop with logged counts, like index
+    # mode; the per-doc fingerprint counts join back for the containment
+    sizes = fp_sketches.select("doc_id", "n_fp")
     pairs = (
-        a.join(b, F.col("a.h") == F.col("b.h"))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"),
-                 F.col("a.n_fp").alias("n1"), F.col("b.n_fp").alias("n2"))
-        .agg(F.count("*").alias("shared"))
-        .where(F.col("shared") >= min_shared)
+        posting_pairs(postings, "h", cfg, "substring", star=False)
+        .where(F.col("common") >= min_shared)
+        .join(sizes.toDF("src", "n1"), "src")
+        .join(sizes.toDF("dst", "n2"), "dst")
+        .select("src", "dst", "n1", "n2", F.col("common").alias("shared"))
     )
     # r9: wide measured slightly better for the md5-winnow oracle twin
     # (4.40 vs 4.59 s) but worse for the production rolling-hash path

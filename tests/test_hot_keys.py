@@ -186,3 +186,82 @@ def test_fused_distinct_candidates_have_no_duplicates(spark, hot_docs):
     total = cand.count()
     assert total > 0
     assert cand.distinct().count() == total
+
+
+def _twin_corpus(spark):
+    """30 docs = one shared boilerplate (hot at a cap of 10) + a 60-word
+    tail shared only with its twin (cold keys), plus 10 unrelated docs:
+    drop-mode counters keep the twin pairs, star-mode candidate builders
+    recover the whole group."""
+    rng = random.Random(5)
+    words = [f"w{i:03d}" for i in range(400)]
+    boiler = " ".join(rng.choice(words) for _ in range(200))
+    rows = []
+    for i in range(30):
+        r2 = random.Random(500 + i // 2)
+        tail = " ".join(f"t{r2.randrange(10**6)}" for _ in range(60))
+        rows.append((i, f"{boiler} {tail}", "s"))
+    for i in range(30, 40):
+        r3 = random.Random(1000 + i)
+        rows.append((i, " ".join(r3.choice(words) for _ in range(260)), "s"))
+    return spark.createDataFrame(rows, "doc_id long, text string, source string")
+
+
+def _banded(docs, cfg):
+    return minhash_dedup(docs, dataclasses.replace(cfg, pair_mode="banded"))[
+        "assignments"]
+
+
+def _simhash(docs, cfg):
+    from rabbittclust_spark.operators.dedup import simhash_edges
+    return simhash_edges(docs, cfg)
+
+
+def _wminhash(docs, cfg):
+    from rabbittclust_spark.operators.dedup import wminhash_pairs
+    return wminhash_pairs(docs, cfg, num_samples=32, min_wjaccard=0.5)
+
+
+def _ngram(docs, cfg):
+    from rabbittclust_spark.operators.dedup import ngram_jaccard_pairs
+    return ngram_jaccard_pairs(docs, n=3, min_jaccard=0.1, block_col="source",
+                               max_posting=cfg.max_posting)
+
+
+def _substring(docs, cfg):
+    from rabbittclust_spark.operators.substring import (
+        sketch_winnow,
+        substring_pairs,
+    )
+    return substring_pairs(sketch_winnow(docs, cfg, window=10), cfg,
+                           min_containment=0.1)
+
+
+@pytest.mark.parametrize("label,corpus,run", [
+    ("banded", _twin_corpus, _banded),
+    # SimHash blocks need near-identical fingerprints to turn hot
+    ("simhash", _hot_corpus, _simhash),
+    ("wminhash", _twin_corpus, _wminhash),
+    ("ngram", _twin_corpus, _ngram),
+    ("substring", _twin_corpus, _substring)])
+def test_hot_set_dataframe_path_per_operator(spark, monkeypatch, caplog,
+                                             label, corpus, run):
+    """Every posting_pairs operator gives identical output whether the hot
+    key set is broadcast or, above HOT_KEY_COLLECT_LIMIT, kept as a
+    parquet-backed DataFrame — with the cap firing in both runs."""
+    from rabbittclust_spark.operators import pairs
+
+    docs = corpus(spark)
+    cfg = dataclasses.replace(BASE_CFG, max_posting=10, hot_hash_mode="star")
+
+    def rows():
+        caplog.clear()
+        with caplog.at_level("WARNING", logger=pairs.__name__):
+            out = sorted(map(tuple, run(docs, cfg).collect()))
+        assert any(f"[{label}]" in m and "hot keys" in m
+                   for m in caplog.messages)
+        return out
+
+    broadcast_path = rows()
+    monkeypatch.setattr(pairs, "HOT_KEY_COLLECT_LIMIT", 0)
+    assert rows() == broadcast_path and broadcast_path
