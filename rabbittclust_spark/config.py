@@ -225,12 +225,13 @@ class PipelineConfig:
 
 # Config fields each DedupPipeline stage actually reads (upstream data
 # dependencies are tracked separately via manifest input ids).  Keep in sync
-# with plans/pipeline.py stage lambdas; a field listed too broadly costs a
+# with the stage thunks of operators/dedup.flagship_stages and the pipeline's
+# own stages in plans/pipeline.py; a field listed too broadly costs a
 # spurious recompute, a field MISSING here serves stale results — when in
 # doubt, include it.
 _STAGE_FIELDS: dict[str, tuple[str, ...]] = {
     "extracted": (),
-    "exact_groups": (),
+    "exact_groups": ("exact_prededup",),
     "sketches": ("shingle_k", "sketch_size", "containment", "contain_compress",
                  "min_sketch_size", "lowercase", "hash_seed", "min_len",
                  "perm_count", "rows_per_band", "perm_seed", "exact_prededup"),

@@ -5,7 +5,9 @@ components -> assignments machinery:
 
 - exact            hash(text) groupBy (pre-collapse; also hot-band defusal #1,
                    SURVEY.md §7 "what's hard")
-- MinHash + LSH    the flagship pipeline (reference parity semantics)
+- MinHash + LSH    the flagship pipeline (reference parity semantics); its
+                   stage graph (flagship_stages) is defined once here and
+                   run in memory, persisted (plans/pipeline.py) or timed
 - SimHash          Charikar blocks as LSH keys, Hamming verify
 - n-gram Jaccard   token-shingle set similarity (SQL-expressible; oracle-checked)
 - embedding cosine see operators/ann.py
@@ -18,12 +20,15 @@ verification or count-based score.
 from __future__ import annotations
 
 import dataclasses
+import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rabbittclust_spark.config import PipelineConfig
 from rabbittclust_spark.functions.simhash import simhash_block_exprs
+# flagship_stages calls several of these through ``ops`` (default: this
+# module), so an import that looks unused here may still be load-bearing
 from rabbittclust_spark.operators.components import connected_components
 from rabbittclust_spark.operators.pairs import build_edges, posting_pairs
 from rabbittclust_spark.operators.postprocess import assignments_from_components
@@ -55,22 +60,105 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
     return h.select("doc_id", F.min("doc_id").over(w).alias("canonical_id"))
 
 
+def flagship_stages(base: DataFrame, cfg: PipelineConfig, run_stage,
+                    ops=None) -> dict[str, DataFrame]:
+    """The flagship stage graph, the one definition every caller runs:
+    exact_groups -> sketches -> edges -> membership -> assignments.
+
+    ``base`` is the (doc_id long, text) input.  Each stage is a named
+    compute thunk handed to ``run_stage(name, reads, compute)``, which
+    returns the DataFrame later stages read; ``reads`` names the stages the
+    thunk reads, "docs" standing for ``base``.  The runner decides what a
+    stage costs: minhash_dedup writes temp-parquet barriers, the persistent
+    pipeline (plans/pipeline.py) writes resumable stage tables,
+    tools/stage_profile.py times each stage.
+
+    The thunks look their operators up on ``ops`` when they run (default:
+    this module), so a caller can route the calls through names of its own
+    module: plans/pipeline.py passes itself, and the spans perfbench's
+    tracer wraps around ``plans.pipeline.build_edges`` etc. keep firing.
+    """
+    ops = ops if ops is not None else sys.modules[__name__]
+    out: dict[str, DataFrame] = {}
+
+    def _exact_groups():
+        if cfg.exact_prededup:
+            return ops.exact_dedup(base)
+        return base.select("doc_id", F.col("doc_id").alias("canonical_id"))
+
+    def _sketches():
+        # the kernel's spread gate is the only repartition: it counts the
+        # exact_groups files with the text scan's, and that table stays a
+        # few files wherever the text is a single-file scan
+        canon = base
+        if cfg.exact_prededup:
+            canon = base.join(
+                out["exact_groups"]
+                .where(F.col("doc_id") == F.col("canonical_id"))
+                .select("doc_id"), "doc_id")
+        if cfg.pair_mode == "banded":
+            # fused kernel: ONE shingling pass yields the bottom-s sketch and
+            # the band keys, so the edges stage never re-shingles
+            return ops.sketch_minhash_bands(canon, cfg)
+        return ops.sketch_minhash(canon, cfg)
+
+    def _edges():
+        sk = out["sketches"]
+        bands = (sk.select("doc_id", "band_keys")
+                 if cfg.pair_mode == "banded" else None)
+        return ops.build_edges(sk.select("doc_id", "len", "n", "sig"), cfg,
+                               bands=bands)
+
+    def _assignments():
+        # node universe = the sketch table: identical to "canon docs above
+        # min_len" but never re-derives `base` (an extract-UDF base would
+        # otherwise re-execute here)
+        canon_assign = ops.assignments_from_components(
+            out["sketches"].select("doc_id"), out["membership"])
+        # propagate cluster ids back through the exact-dup mapping; docs
+        # below min_len have no sketch and drop out, as the reference's
+        # minLen filter drops them
+        return (
+            out["exact_groups"]
+            .join(canon_assign.withColumnRenamed("doc_id", "canonical_id"),
+                  "canonical_id")
+            .select("doc_id", "cluster_id",
+                    (F.col("doc_id") == F.col("cluster_id")).alias("is_rep"))
+        )
+
+    out["exact_groups"] = run_stage("exact_groups", ("docs",), _exact_groups)
+    out["sketches"] = run_stage("sketches", ("docs", "exact_groups"),
+                                _sketches)
+    out["edges"] = run_stage("edges", ("sketches",), _edges)
+    out["membership"] = run_stage(
+        "membership", ("edges",),
+        lambda: ops.connected_components(out["edges"]))
+    out["assignments"] = run_stage(
+        "assignments", ("membership", "exact_groups", "sketches"),
+        _assignments)
+    return out
+
+
 def minhash_dedup(docs: DataFrame, cfg: PipelineConfig,
                   id_col: str = "doc_id", text_col: str = "text",
                   sketch_df: DataFrame | None = None) -> dict[str, DataFrame]:
     """The flagship pipeline: docs -> assignments at cfg.threshold.
 
-    Stages (SURVEY.md §7 minimum slice): optional exact pre-collapse ->
+    Runs flagship_stages in memory (SURVEY.md §7 minimum slice): exact
+    pre-collapse (the identity map when cfg.exact_prededup is off) ->
     bottom-s MinHash sketch -> candidate pairs (index/probe/banded mode) ->
     Mash distance -> threshold filter -> large-star/small-star CC ->
-    assignments with singletons.  Returns the intermediate DataFrames so the
-    plan orchestrator can checkpoint each stage.
+    assignments with singletons.  Returns every stage's DataFrame (in
+    banded mode the sketches table carries band_keys, as the pipeline's
+    stage table does).
 
-    The exact-group and sketch stages are written once as temp-parquet
+    The exact_groups and sketches stages are written once as temp-parquet
     barriers (sources.tables.materialize), so the expensive UDF/join lineage
     executes exactly once even though the candidate build, CC and the final
-    assignment join consume them in several actions (the parquet-table
-    pipeline in plans/pipeline.py persists its own stage tables).
+    assignment join consume them in several actions.  The other stages stay
+    lazy: build_edges and connected_components write their own barriers or
+    collect, and the edges plan ends in a narrow distance filter over the
+    pair_counts barrier that CC's single limited collect executes once.
 
     ``sketch_df`` swaps in a precomputed sketch table for the default
     rolling-shingle kernel — (doc_id, len, n, sig array<long>) with sig
@@ -83,77 +171,22 @@ def minhash_dedup(docs: DataFrame, cfg: PipelineConfig,
     consistency: when cfg.exact_prededup is on, sketch_df must cover
     exactly the canonical docs at or above cfg.min_len.
     """
-    from rabbittclust_spark.sources.tables import materialize as _mat
+    from rabbittclust_spark.sources.tables import materialize
+
+    if (sketch_df is not None and cfg.pair_mode == "banded"
+            and "band_keys" not in sketch_df.columns):
+        raise ValueError(
+            "banded pair_mode with sketch_df requires a band_keys column")
+
+    def run_stage(name, reads, compute):
+        if name not in ("exact_groups", "sketches"):
+            return compute()
+        use_given = name == "sketches" and sketch_df is not None
+        return materialize(sketch_df if use_given else compute(), name)
 
     base = docs.select(F.col(id_col).cast("long").alias("doc_id"),
                        F.col(text_col).alias("text"))
-
-    if cfg.exact_prededup:
-        # one pass over `base` for the md5 table: the exact mapping is
-        # consumed again by the final assignment join, and `base` may be
-        # expensive to re-derive (e.g. an html-extract UDF) — measured
-        # 3x extract re-execution without this barrier
-        exact = _mat(exact_dedup(base), "exact")
-        # r9: spread the few-file text scan BEFORE the canon join — the
-        # joined plan's inputFiles() includes the exact barrier's files, so
-        # the sketch kernel's own spread gate cannot see that the TEXT side
-        # is a single-file scan (the kernel then runs on one core)
-        from rabbittclust_spark.operators.sketch import _spread_for_cpu_kernel
-        canon_docs = (
-            _spread_for_cpu_kernel(base)
-            .join(exact.where(F.col("doc_id") == F.col("canonical_id"))
-                  .select("doc_id"), "doc_id")
-        )
-    else:
-        exact = base.select("doc_id", F.col("doc_id").alias("canonical_id"))
-        canon_docs = base
-
-    if cfg.pair_mode == "banded":
-        # fused kernel: ONE shingling pass produces both the bottom-s sketch
-        # and the band keys (two separate passes re-shingled every doc twice)
-        if sketch_df is not None and "band_keys" not in sketch_df.columns:
-            raise ValueError(
-                "banded pair_mode with sketch_df requires a band_keys column")
-        fused = _mat(sketch_df if sketch_df is not None
-                     else sketch_minhash_bands(canon_docs, cfg), "sketches")
-        sketches = fused.select("doc_id", "len", "n", "sig")
-        bands = fused.select("doc_id", "band_keys")
-    else:
-        sketches = _mat(sketch_df if sketch_df is not None
-                        else sketch_minhash(canon_docs, cfg), "sketches")
-        bands = None
-    edges = build_edges(sketches, cfg, bands=bands)
-    # r9: no edge barrier — build_edges ends in a narrow distance filter
-    # over the pair_counts barrier (see pairs.pair_counts_probe), so CC's
-    # single limited collect executes it exactly once straight off parquet;
-    # a dedicated edges round-trip was a pure extra write+read job.  The
-    # returned dict's "edges" entry stays the same cheap narrow plan for
-    # pipeline consumers (plans/pipeline.py persists its own stage anyway).
-    membership = connected_components(edges)
-    # node universe = the (materialized) sketch table: identical to
-    # "canon docs above min_len" but NEVER re-derives `base` (an extract-UDF
-    # base would otherwise re-execute here)
-    canon_assign = assignments_from_components(
-        sketches.select("doc_id"), membership
-    )
-    # propagate cluster ids back through the exact-dup mapping; docs below
-    # min_len keep cluster_id = themselves only if their canonical survived —
-    # reference drops them entirely (minLen filter), we do too.
-    assignments = (
-        exact.join(canon_assign.withColumnRenamed("doc_id", "canonical_id"),
-                   "canonical_id")
-        .select(
-            "doc_id", "cluster_id",
-            (F.col("doc_id") == F.col("cluster_id")).alias("is_rep"),
-        )
-    )
-    return {
-        "sketches": sketches,
-        "edges": edges,
-        "membership": membership,
-        "assignments": assignments,
-        "exact_groups": exact,
-    }
+    return flagship_stages(base, cfg, run_stage)
 
 
 def simhash_edges(docs: DataFrame, cfg: PipelineConfig,

@@ -145,3 +145,43 @@ def test_reps_and_dedup_stages(spark, corpus, tmp_path_factory):
     # rep_rank 0 is the deterministic min-doc start
     r0 = reps[reps.rep_rank == 0]
     assert (r0.groupby("cluster_id").size() == 1).all()
+
+
+@pytest.mark.parametrize("exact_prededup", [True, False])
+@pytest.mark.parametrize("pair_mode", ["probe", "index", "banded"])
+def test_pipeline_matches_minhash_dedup(spark, corpus, tmp_path_factory,
+                                        pair_mode, exact_prededup):
+    """The persistent pipeline and the in-memory flagship run one stage
+    graph: their assignments are identical in every pair mode, with and
+    without the exact pre-collapse."""
+    import dataclasses
+
+    from rabbittclust_spark.operators.dedup import minhash_dedup
+
+    cfg = dataclasses.replace(CFG, pair_mode=pair_mode,
+                              exact_prededup=exact_prededup)
+    docs = spark.createDataFrame(corpus[["doc_id", "text"]])
+    root = str(tmp_path_factory.mktemp("parity"))
+    piped = DedupPipeline(spark, cfg, root).run(docs, resume=False)
+    in_memory = minhash_dedup(docs, cfg)
+    assert (sorted(piped["assignments"].collect())
+            == sorted(in_memory["assignments"].collect()))
+
+
+def test_prededup_flip_recomputes_exact_groups(spark, corpus,
+                                               tmp_path_factory):
+    """exact_prededup decides the exact_groups table (md5 groups or the
+    identity map), so resuming a root under the flipped flag recomputes it
+    and returns what a fresh run returns."""
+    import dataclasses
+
+    docs = spark.createDataFrame(corpus[["doc_id", "text"]])
+    root = str(tmp_path_factory.mktemp("flip"))
+    DedupPipeline(spark, CFG, root).run(docs)
+    off = dataclasses.replace(CFG, exact_prededup=False)
+    resumed = DedupPipeline(spark, off, root).run(docs, resume=True)
+    fresh = DedupPipeline(spark, off, str(tmp_path_factory.mktemp("fresh"))
+                          ).run(docs, resume=False)
+    for stage in ("exact_groups", "assignments"):
+        assert (sorted(resumed[stage].collect())
+                == sorted(fresh[stage].collect())), stage

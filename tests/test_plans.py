@@ -77,3 +77,29 @@ def test_verify_join_is_shuffle_hash(spark, docs):
     plan = _plan(verify_join(cand, sk))
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_flagship_sketch_input_spread_once(spark, docs, monkeypatch):
+    """On a single-file scan the flagship's sketch stage shuffles its text
+    input once: the sketch kernel's spread gate is the only repartition
+    before the UDF, not a second one in front of the exact-group join."""
+    import rabbittclust_spark.sources.tables as tables
+    from rabbittclust_spark.operators.dedup import minhash_dedup
+
+    real = tables.materialize
+    seen = {}
+
+    class _Stop(Exception):
+        pass
+
+    def capture(df, name="stage", wide=False):
+        if name == "sketches":
+            seen[name] = df
+            raise _Stop
+        return real(df, name, wide)
+
+    monkeypatch.setattr(tables, "materialize", capture)
+    with pytest.raises(_Stop):
+        minhash_dedup(docs, PipelineConfig(min_len=20))
+    plan = seen["sketches"]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1, plan

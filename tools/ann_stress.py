@@ -22,11 +22,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np
 
-CORPUS_DIR = "/root/repo/.out/ann_stress_corpus"
+CORPUS_DIR = os.path.join(ROOT, ".out", "ann_stress_corpus")
 
 
 def main() -> None:
@@ -131,7 +132,7 @@ degrade for both families.  Both scale paths hold at 101k under their
 default signatures; the driver contract oracle-checks `ivf_topk`
 end-to-end at a fixed literal quantizer (__spark_entry__._sql_ivf_topk).
 """
-        with open("/root/repo/BENCH/SCALE.md", "a") as f:
+        with open(os.path.join(ROOT, "BENCH", "SCALE.md"), "a") as f:
             f.write(md)
 
 

@@ -154,7 +154,7 @@ def evaluate_corpus(corpus: str, cpus: int = 32) -> dict:
 
 def main() -> None:
     corpus = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith(
-        "--") else "/root/repo/.out/bench_corpus"
+        "--") else str(Path(__file__).resolve().parents[1] / ".out" / "bench_corpus")
     cpus = 32
     for i, a in enumerate(sys.argv):
         if a == "--cpus":

@@ -25,9 +25,10 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-CORPUS_DIR = "/root/repo/.out/stress_corpus"
+CORPUS_DIR = os.path.join(ROOT, ".out", "stress_corpus")
 
 
 # Static history appended to every regenerated SCALE.md — the run table
@@ -223,7 +224,7 @@ Hot-key escalation log (operator-emitted, no silent caps):
 ```
 """
     md += _HISTORY_MD
-    with open("/root/repo/BENCH/SCALE.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "SCALE.md"), "w") as f:
         f.write(md)
     spark.stop()
 

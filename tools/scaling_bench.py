@@ -40,9 +40,10 @@ def wait_for_quiet(threshold: float = 2.0, max_wait: int = 600) -> float:
     return os.getloadavg()[0]
 from datetime import datetime, timezone
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-CORPUS_DIR = "/root/repo/.out/bench_corpus"
+CORPUS_DIR = os.path.join(ROOT, ".out", "bench_corpus")
 
 SHM_DIR = "/dev/shm/rtc_bench"
 
@@ -349,7 +350,7 @@ def write_interleaved_baseline_md(args, summary: dict) -> None:
     the all-published-pairs median of the normalized number, no window
     selection, no prose required), plus the NMI/purity cluster-quality
     line when --eval ran."""
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
     n_lo, n_hi = summary["pair"]
     rows = "\n".join(
@@ -377,7 +378,7 @@ planted truth_cluster labels (junk "short" docs = singleton truth classes):
   exact/near families themselves cluster at recall = precision = 1.0
   (tests/test_pipeline_e2e.py).
 """
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
         f.write(f"""# BENCH/BASELINE — measured numbers
 
 Generated by `tools/scaling_bench.py --interleaved` on {now}.
@@ -609,7 +610,7 @@ def main() -> None:
                               summary["cluster_quality"]}), flush=True)
         if args.write_md and pairs:
             write_interleaved_baseline_md(args, summary)
-            print("wrote /root/repo/BENCH/BASELINE.md", flush=True)
+            print("wrote BENCH/BASELINE.md", flush=True)
         return
 
     if not args.skip_gen or not os.path.exists(CORPUS_DIR):
@@ -645,12 +646,12 @@ def main() -> None:
     print(f"hardware ceiling 8->32 (SMT): {hw['ceiling_efficiency']:.3f}",
           flush=True)
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
     matrix_rows = "\n".join(
         f"| local[{c}] | {r['wall_sec']} | {r['all_walls']} | {r['docs_per_sec']} |"
         for c, r in sorted(results.items()))
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
         f.write(f"""# BENCH/BASELINE — measured numbers
 
 Generated by `tools/scaling_bench.py` on {now}.
@@ -708,7 +709,7 @@ beyond it.
              "hardware_8_32": hw})}
 ```
 """)
-    print("wrote /root/repo/BENCH/BASELINE.md")
+    print("wrote BENCH/BASELINE.md")
 
 
 if __name__ == "__main__":

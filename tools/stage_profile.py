@@ -1,8 +1,9 @@
 """Per-stage scaling profile of the flagship pipeline: the attribution
 instrument for the BASELINE.json >=0.8 efficiency criterion.
 
-Runs the flagship stage-by-stage (extract / exact / sketch / pairs /
-edges / cc / assign, each behind its materialize barrier) at BOTH
+Runs the flagship stage-by-stage (extract, then the stages of
+operators/dedup.flagship_stages: exact_groups / sketches / edges /
+membership / assignments, each timed up to its materialize barrier) at BOTH
 parallelism levels of the criterion pair, INTERLEAVED per rep so each
 (lo, hi) comparison shares one host window, with per-stage walls and
 per-stage external-core monitoring.  The per-stage efficiencies are then
@@ -25,10 +26,12 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tools.scaling_bench import (  # noqa: E402
     CORPUS_DIR,
@@ -43,17 +46,8 @@ def profile(cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from rabbittclust_spark.config import PipelineConfig
-    from rabbittclust_spark.operators.components import connected_components
-    from rabbittclust_spark.operators.dedup import exact_dedup, minhash_dedup
+    from rabbittclust_spark.operators.dedup import flagship_stages, minhash_dedup
     from rabbittclust_spark.operators.extract import with_extracted_text
-    from rabbittclust_spark.operators.pairs import (
-        edges_from_pair_counts,
-        pair_counts_probe,
-    )
-    from rabbittclust_spark.operators.postprocess import (
-        assignments_from_components,
-    )
-    from rabbittclust_spark.operators.sketch import sketch_minhash
     from rabbittclust_spark.session import get_spark
     from rabbittclust_spark.sources.tables import materialize, materialize_scope
 
@@ -73,6 +67,9 @@ def profile(cpus: int) -> dict:
         ext[name] = round(mon.stop(), 2)
         return out
 
+    def timed_stage(name, reads, compute):
+        return timed(name, lambda: materialize(compute(), name))
+
     with materialize_scope():
         # warmup: compile every unique plan shape AND warm every python
         # UDF worker outside the timers (see scaling_bench.run_flagship)
@@ -85,28 +82,7 @@ def profile(cpus: int) -> dict:
             with_extracted_text(docs), "extracted"))
         base = extracted.select(
             F.col("doc_id").cast("long").alias("doc_id"), F.col("text"))
-
-        def _exact():
-            exact = materialize(exact_dedup(base), "exact")
-            canon = base.join(
-                exact.where(F.col("doc_id") == F.col("canonical_id"))
-                .select("doc_id"), "doc_id")
-            return exact, canon
-        exact, canon = timed("exact", _exact)
-        sk = timed("sketch", lambda: materialize(
-            sketch_minhash(canon, cfg), "sk"))
-        pairs = timed("pairs", lambda: pair_counts_probe(sk, cfg))
-        edges = timed("edges", lambda: materialize(
-            edges_from_pair_counts(pairs, cfg), "edges"))
-        memb = timed("cc", lambda: connected_components(edges))
-
-        def _assign():
-            canon_assign = assignments_from_components(
-                sk.select("doc_id"), memb)
-            return (exact.join(
-                canon_assign.withColumnRenamed("doc_id", "canonical_id"),
-                "canonical_id").select("doc_id", "cluster_id").count())
-        n = timed("assign", _assign)
+        n = flagship_stages(base, cfg, timed_stage)["assignments"].count()
         total = round(time.time() - T0, 2)
     spark.stop()
     return {"cpus": cpus, "docs": n, "stages": stages, "ext": ext,
