@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from rabbittclust_spark.functions.distances import cosine_expr
 from rabbittclust_spark.functions.hashing import splitmix64
+from rabbittclust_spark.sources.tables import empty_frame
 
 
 def _prep(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -408,7 +409,7 @@ def srp_bucket_keys(vectors: DataFrame, num_planes: int = 16,
 
     dim_row = vectors.select(F.size("vec").alias("d")).first()
     if dim_row is None:
-        return vectors.sparkSession.createDataFrame([], "vec_id long, bucket long")
+        return empty_frame(vectors.sparkSession, "vec_id long, bucket long")
     dim = dim_row["d"]
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((num_tables, num_planes, dim))

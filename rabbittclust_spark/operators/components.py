@@ -21,6 +21,8 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rabbittclust_spark.sources.tables import empty_frame
+
 _LOG = logging.getLogger(__name__)
 
 
@@ -75,7 +77,7 @@ def _driver_union_find(spark, pdf) -> DataFrame:
     import pandas as pd
 
     if pdf.empty:
-        return spark.createDataFrame([], "doc_id long, cluster_id long")
+        return empty_frame(spark, "doc_id long, cluster_id long")
     us = pdf["u"].to_numpy(dtype=np.int64)
     vs = pdf["v"].to_numpy(dtype=np.int64)
     nodes, inv = np.unique(np.concatenate([us, vs]), return_inverse=True)

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rabbittclust_spark.sources.tables import empty_frame
+
 
 def _weight_expr(dist_col: str | None, weight_col: str | None):
     """Edge weight: an explicit weight column (coarsened super-graphs),
@@ -259,7 +261,7 @@ def label_propagation(edges: DataFrame, resolution: float = 1.0,
     m2_row = deg.agg(F.coalesce(F.sum("k"), F.lit(0.0)).alias("s")).collect()[0]
     m2 = float(m2_row["s"])  # = 2m (degree sum, loops counted twice)
     if m2 <= 0:
-        return edges.sparkSession.createDataFrame([], "doc_id long, community long")
+        return empty_frame(edges.sparkSession, "doc_id long, community long")
 
     labels = deg.select(F.col("u"), F.col("u").alias("label"))
     seen_fps: list[tuple[int, int]] = []
@@ -339,7 +341,7 @@ def _labels_df(spark, nodes, comm) -> DataFrame:
     import pandas as pd
 
     if len(nodes) == 0:
-        return spark.createDataFrame([], "doc_id long, community long")
+        return empty_frame(spark, "doc_id long, community long")
     return spark.createDataFrame(
         pd.DataFrame({"doc_id": nodes, "community": comm}))
 

@@ -98,7 +98,8 @@ def _oriented(x: Column, y: Column, vx: Column | None = None,
 
 def _apply_posting_cap(postings: DataFrame, keys: str | list[str],
                        cfg: PipelineConfig, label: str, allow_star: bool = True,
-                       doc_col: str = "doc_id", value: str | None = None
+                       doc_col: str = "doc_id", value: str | None = None,
+                       touching: str | None = None
                        ) -> tuple[DataFrame, DataFrame | None]:
     """--max-posting analog with accounting and optional escalation.
 
@@ -121,6 +122,8 @@ def _apply_posting_cap(postings: DataFrame, keys: str | list[str],
 
     Returns (cold_postings, star_candidates(src, dst[, v1, v2]) | None):
     each anchor carries its per-doc ``value``, so a star pair has both.
+    ``touching`` names a boolean posting column that anchors carry the same
+    way; a star pair is then kept only when either end has it set.
     """
     if cfg.max_posting is None:
         return postings, None
@@ -151,8 +154,15 @@ def _apply_posting_cap(postings: DataFrame, keys: str | list[str],
         # broadcast a local relation — no extra shuffle, no second job
         n_hot = len(hot_rows)
         n_post = sum(int(r["_pl"]) for r in hot_rows)
+        # from a pandas frame the set is an Arrow-built LocalRelation that
+        # stays in the JVM; a list of tuples would be a pickled-row RDD
+        # whose scan runs Python tasks.  A null key never joins, so it is
+        # left out (pandas would turn a null long into NaN)
+        import pandas as pd
         hot = F.broadcast(postings.sparkSession.createDataFrame(
-            [tuple(r[k] for k in keys) for r in hot_rows],
+            pd.DataFrame([tuple(r[k] for k in keys) for r in hot_rows
+                          if all(r[k] is not None for k in keys)],
+                         columns=keys),
             schema=counts.select(*keys).schema))
     else:
         # adversarial hot set: true totals for the log, then keep the key
@@ -182,6 +192,8 @@ def _apply_posting_cap(postings: DataFrame, keys: str | list[str],
     # doc shares the hot key, it captures the anchor role and exact verify
     # kills every star pair, silently dropping the genuine dup group.
     val = [] if value is None else [F.col(value).alias("v")]
+    if touching is not None:
+        val.append(F.col(touching).alias("t"))
     anchors = hot_postings.groupBy(*keys).agg(*[
         F.min(F.struct(F.xxhash64(doc_col, F.lit(i)).alias("h"),
                        F.col(doc_col).alias("d"), *val)).alias(f"_a{i}")
@@ -191,13 +203,10 @@ def _apply_posting_cap(postings: DataFrame, keys: str | list[str],
         .alias("_anchor"))
     doc, anchor = F.col(doc_col), F.col("_anchor.d")
     values = [] if value is None else [F.col(value), F.col("_anchor.v")]
-    star = (
-        hot_postings.join(anchors, keys)
-        .where(doc != anchor)
-        .select(*_oriented(doc, anchor, *values))
-        .distinct()
-    )
-    return cold, star
+    star = hot_postings.join(anchors, keys).where(doc != anchor)
+    if touching is not None:
+        star = star.where(F.col(touching) | F.col("_anchor.t"))
+    return cold, star.select(*_oriented(doc, anchor, *values)).distinct()
 
 
 def posting_pairs(postings: DataFrame, keys: str | list[str],
@@ -224,7 +233,8 @@ def posting_pairs(postings: DataFrame, keys: str | list[str],
     ``settled`` is the append form (the reference's start index,
     src/MST.cpp:391-400): posting rows of docs whose pairs among themselves
     are already known.  The cap counts both sides; only pairs touching a
-    doc of ``postings`` are built.
+    doc of ``postings`` are built: a flag ``_new`` marks those docs, and a
+    star pair keeps the pair when its doc or its anchor carries it.
 
     Candidate callers ``.select("src", "dst")``: Catalyst then prunes the
     aggregate to a plain distinct over cold pairs ∪ star pairs (one shuffle).
@@ -235,8 +245,9 @@ def posting_pairs(postings: DataFrame, keys: str | list[str],
     if settled is not None:
         rows = settled.withColumn("_new", F.lit(False)).unionByName(
             postings.withColumn("_new", F.lit(True)))
-    cold, star_pairs = _apply_posting_cap(rows, keys, cfg, label,
-                                          allow_star=star, value=value)
+    cold, star_pairs = _apply_posting_cap(
+        rows, keys, cfg, label, allow_star=star, value=value,
+        touching=None if settled is None else "_new")
     a = cold.where("_new") if settled is not None else cold
     ida, idb = F.col("a.doc_id"), F.col("b.doc_id")
     joined = a.alias("a").join(
@@ -260,11 +271,6 @@ def posting_pairs(postings: DataFrame, keys: str | list[str],
     if star_pairs is None:
         return (pairs.groupBy("src", "dst").agg(*aggs)
                 .withColumn("star", F.lit(False)))
-    if settled is not None:
-        # settled x settled pairs are already known
-        new_ids = postings.select("doc_id")
-        star_pairs = star_pairs.join(new_ids.toDF("src"), "src", "left_semi") \
-            .unionByName(star_pairs.join(new_ids.toDF("dst"), "dst", "left_semi"))
     pairs = pairs.withColumn("star", F.lit(False)).unionByName(
         star_pairs.withColumn("star", F.lit(True)), allowMissingColumns=True)
     return pairs.groupBy("src", "dst").agg(*aggs, F.max("star").alias("star"))

@@ -49,6 +49,16 @@ def validate_input_schema(df: DataFrame, required: dict[str, str],
             + f"; actual schema: {actual}")
 
 
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty frame of ``schema`` that runs no Python task.
+
+    ``createDataFrame([], schema)`` alone is a pickled-row RDD: every stage
+    that scans it (or a union with it) starts Python workers for no rows.
+    Behind ``limit(0)`` Catalyst folds it to an empty local relation and
+    prunes it out of unions and joins."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
 _MATERIALIZE_DIRS: list[str] = []
 
 

@@ -23,6 +23,8 @@ document via a ranking window.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,7 +40,8 @@ from rabbittclust_spark.operators.sketch import sketch_minhash
 
 def append_batch(old_sketches: DataFrame, old_assignments: DataFrame,
                  new_docs: DataFrame, cfg: PipelineConfig,
-                 id_col: str = "doc_id", text_col: str = "text"
+                 id_col: str = "doc_id", text_col: str = "text",
+                 persist: Callable[[DataFrame], DataFrame] | None = None
                  ) -> dict[str, DataFrame]:
     """Returns {"sketches": updated, "assignments": merged, "edges": new}.
 
@@ -51,10 +54,17 @@ def append_batch(old_sketches: DataFrame, old_assignments: DataFrame,
 
     Cluster ids remain the component-min doc id, so re-clustering is stable:
     untouched clusters keep their ids (their min member is unchanged).
+
+    ``persist`` writes the new docs' sketches once and returns them read
+    back (the streaming sink writes them as the state's new sketch part);
+    by default they go to a temp-parquet barrier.
     """
     new_sk = sketch_minhash(new_docs, cfg, id_col=id_col, text_col=text_col)
-    from rabbittclust_spark.sources.tables import materialize
-    new_sk = materialize(new_sk, "append_sketches")
+    if persist is None:
+        from rabbittclust_spark.sources.tables import materialize
+        new_sk = materialize(new_sk, "append_sketches")
+    else:
+        new_sk = persist(new_sk)
     old_sk = old_sketches.select("doc_id", "len", "n", "sig")
     all_sk = old_sk.unionByName(new_sk)
     new_edges = edges_from_pair_counts(
@@ -86,7 +96,8 @@ def merge_increment(old_assignments: DataFrame, new_edges: DataFrame,
 def query_topk_postings(rep_postings: DataFrame, query_postings: DataFrame,
                         distance_k: int, k: int = 5,
                         key_cols: tuple[str, ...] = ("key",),
-                        round_dp: int | None = 6) -> DataFrame:
+                        round_dp: int | None = 6,
+                        query_sizes: str | None = None) -> DataFrame:
     """RepDB --query over an inverted index of posting rows
     (src/greedy.cpp:2536-2638: the reference probes the rep-only index, so
     cost is O(shared-key candidates), never queries x reps).
@@ -99,20 +110,28 @@ def query_topk_postings(rep_postings: DataFrame, query_postings: DataFrame,
     across engines.  Reps sharing no key with a query are not returned —
     reference semantics (an index probe cannot see them).
 
+    ``query_sizes`` names a column of ``query_postings`` that already holds
+    each query's posting count; it then rides the join, and the query
+    postings are read once instead of once more for the count.
+
     Returns (query_id, rep_id, common, n1, n2, dist, rank).
     """
+    sizes = [] if query_sizes is None else [F.col(query_sizes).alias("n1")]
     q = query_postings.select(F.col("doc_id").cast("long").alias("query_id"),
-                              *[F.col(c) for c in key_cols])
+                              *[F.col(c) for c in key_cols], *sizes)
     r = rep_postings.select(F.col("doc_id").cast("long").alias("rep_id"),
                             *[F.col(c) for c in key_cols])
-    n_q = q.groupBy("query_id").agg(F.count("*").alias("n1"))
     n_r = r.groupBy("rep_id").agg(F.count("*").alias("n2"))
     pairs = (
         q.join(r, list(key_cols))
         .where(F.col("query_id") != F.col("rep_id"))
-        .groupBy("query_id", "rep_id").agg(F.count("*").alias("common"))
-        .join(n_q, "query_id").join(n_r, "rep_id")
+        .groupBy("query_id", "rep_id", *(["n1"] if sizes else []))
+        .agg(F.count("*").alias("common"))
     )
+    if query_sizes is None:
+        n_q = q.groupBy("query_id").agg(F.count("*").alias("n1"))
+        pairs = pairs.join(n_q, "query_id")
+    pairs = pairs.join(n_r, "rep_id")
     j = jaccard_expr(F.col("common"), F.col("n1"), F.col("n2"))
     dist = mash_distance_expr(j, distance_k)
     if round_dp is not None:
@@ -152,14 +171,17 @@ def query_topk(rep_sketches: DataFrame, query_docs: DataFrame,
     from rabbittclust_spark.operators.pairs import _apply_posting_cap
 
     q_sk = sketch_minhash(query_docs, cfg, id_col=id_col, text_col=text_col)
-    q_post = q_sk.select("doc_id", F.explode("sig").alias("key"))
+    # a query's posting count is its sketch size: carried, so the sketch
+    # kernel runs once per query
+    q_post = q_sk.select("doc_id", F.size("sig").alias("n"),
+                         F.explode("sig").alias("key"))
     r_post = rep_sketches.select("doc_id", F.explode("sig").alias("key"))
     # count-aggregation path: hot rep postings drop WITH logged accounting
     # (allow_star=False — star candidates carry no counts), like index mode
     r_post, _ = _apply_posting_cap(r_post, "key", cfg, "repdb",
                                    allow_star=False)
     out = query_topk_postings(r_post, q_post, cfg.distance_k, k=k,
-                              key_cols=("key",))
+                              key_cols=("key",), query_sizes="n")
     return out.select("query_id", "rep_id", "dist", "rank")
 
 

@@ -154,3 +154,34 @@ def test_append_onto_banded_state(spark):
     got = {r.doc_id: r.cluster_id for r in out["assignments"].collect()}
     assert got == {1: 1, 3: 3, 10: 1}
     assert out["sketches"].columns == ["doc_id", "len", "n", "sig"]
+
+
+def test_query_sketches_once(spark, base_state, tmp_path):
+    """With parquet-backed reps the query's sketch kernel is the plan's only
+    Python stage: the query postings feed the join and the size count from
+    one sketch pass."""
+    from rabbittclust_spark.operators.sketch import _SKETCH_SCHEMA
+
+    path = str(tmp_path / "reps")
+    base_state["sketches"].write.parquet(path)
+    reps = spark.read.schema(_SKETCH_SCHEMA).parquet(path)
+    queries = _mk_docs(spark, [(100, base_state["a"] + "whiskey ")])
+    out = assign_or_novel(reps, queries, CFG)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInPandas") <= 1, plan
+    got = {r.query_id: (r.rep_id, r.is_novel) for r in out.collect()}
+    assert got[100][1] is False and got[100][0] in (1, 2)
+
+
+def test_traced_names_stay_module_attributes():
+    """perfbench's tracer wraps ``owner.__dict__[attr]`` for every patch
+    point; each one must stay an attribute of the module it names."""
+    import importlib
+
+    from perfbench.trace import PATCH_POINTS
+
+    for mod, cls, attr, _ in PATCH_POINTS:
+        owner = importlib.import_module(mod)
+        if cls:
+            owner = getattr(owner, cls)
+        assert attr in owner.__dict__, (mod, attr)

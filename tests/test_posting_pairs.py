@@ -165,3 +165,32 @@ def test_candidate_select_is_one_distinct(spark):
         .select("src", "dst")
     got = [(r.src, r.dst) for r in cand.collect()]
     assert len(got) == len(set(got)) == len(hot) * (len(hot) - 1) // 2
+
+
+def test_hot_set_plans_no_rdd_scan(spark, tmp_path):
+    """With the cap firing on parquet-backed postings, the broadcast hot-key
+    set is a JVM local relation: no RDD scan that would run Python tasks."""
+    hot = list(range(10, 16))
+    rows = [(d, "hot") for d in hot] + [(10, "x"), (11, "x"), (20, "x")]
+    path = str(tmp_path / "postings")
+    _postings(spark, rows).write.parquet(path)
+    postings = spark.read.schema("doc_id long, h string").parquet(path)
+    out = posting_pairs(postings, "h", CAP3, "t")
+    for plan in (out._jdf.queryExecution().optimizedPlan(),
+                 out._jdf.queryExecution().executedPlan()):
+        assert "RDD" not in plan.toString(), plan.toString()
+    assert _collect(out) == _collect(
+        posting_pairs(_postings(spark, rows), "h", CAP3, "t"))
+
+
+def test_hot_null_key_never_pairs(spark):
+    """A null key above the cap is counted as hot but pairs nothing, alone
+    or next to a real hot key."""
+    rows = [(d, "hot") for d in range(10, 16)] + [(10, "x"), (11, "x")]
+    nulls = [(d, None) for d in range(30, 36)]
+
+    def pairs(r):
+        return _collect(posting_pairs(_postings(spark, r), "h", CAP3, "t"))
+
+    assert pairs(rows + nulls) == pairs(rows)
+    assert pairs(nulls) == {}
