@@ -96,8 +96,7 @@ def merge_increment(old_assignments: DataFrame, new_edges: DataFrame,
 def query_topk_postings(rep_postings: DataFrame, query_postings: DataFrame,
                         distance_k: int, k: int = 5,
                         key_cols: tuple[str, ...] = ("key",),
-                        round_dp: int | None = 6,
-                        query_sizes: str | None = None) -> DataFrame:
+                        round_dp: int | None = 6) -> DataFrame:
     """RepDB --query over an inverted index of posting rows
     (src/greedy.cpp:2536-2638: the reference probes the rep-only index, so
     cost is O(shared-key candidates), never queries x reps).
@@ -110,28 +109,23 @@ def query_topk_postings(rep_postings: DataFrame, query_postings: DataFrame,
     across engines.  Reps sharing no key with a query are not returned —
     reference semantics (an index probe cannot see them).
 
-    ``query_sizes`` names a column of ``query_postings`` that already holds
-    each query's posting count; it then rides the join, and the query
-    postings are read once instead of once more for the count.
-
     Returns (query_id, rep_id, common, n1, n2, dist, rank).
     """
-    sizes = [] if query_sizes is None else [F.col(query_sizes).alias("n1")]
     q = query_postings.select(F.col("doc_id").cast("long").alias("query_id"),
-                              *[F.col(c) for c in key_cols], *sizes)
+                              *[F.col(c) for c in key_cols])
+    # each query's posting count rides its rows, so the query postings (and
+    # whatever builds them, e.g. a sketch kernel) are read once
+    q = q.withColumn("n1", F.count("*").over(Window.partitionBy("query_id")))
     r = rep_postings.select(F.col("doc_id").cast("long").alias("rep_id"),
                             *[F.col(c) for c in key_cols])
     n_r = r.groupBy("rep_id").agg(F.count("*").alias("n2"))
     pairs = (
         q.join(r, list(key_cols))
         .where(F.col("query_id") != F.col("rep_id"))
-        .groupBy("query_id", "rep_id", *(["n1"] if sizes else []))
+        .groupBy("query_id", "rep_id", "n1")
         .agg(F.count("*").alias("common"))
+        .join(n_r, "rep_id")
     )
-    if query_sizes is None:
-        n_q = q.groupBy("query_id").agg(F.count("*").alias("n1"))
-        pairs = pairs.join(n_q, "query_id")
-    pairs = pairs.join(n_r, "rep_id")
     j = jaccard_expr(F.col("common"), F.col("n1"), F.col("n2"))
     dist = mash_distance_expr(j, distance_k)
     if round_dp is not None:
@@ -171,17 +165,14 @@ def query_topk(rep_sketches: DataFrame, query_docs: DataFrame,
     from rabbittclust_spark.operators.pairs import _apply_posting_cap
 
     q_sk = sketch_minhash(query_docs, cfg, id_col=id_col, text_col=text_col)
-    # a query's posting count is its sketch size: carried, so the sketch
-    # kernel runs once per query
-    q_post = q_sk.select("doc_id", F.size("sig").alias("n"),
-                         F.explode("sig").alias("key"))
+    q_post = q_sk.select("doc_id", F.explode("sig").alias("key"))
     r_post = rep_sketches.select("doc_id", F.explode("sig").alias("key"))
     # count-aggregation path: hot rep postings drop WITH logged accounting
     # (allow_star=False — star candidates carry no counts), like index mode
     r_post, _ = _apply_posting_cap(r_post, "key", cfg, "repdb",
                                    allow_star=False)
     out = query_topk_postings(r_post, q_post, cfg.distance_k, k=k,
-                              key_cols=("key",), query_sizes="n")
+                              key_cols=("key",))
     return out.select("query_id", "rep_id", "dist", "rank")
 
 

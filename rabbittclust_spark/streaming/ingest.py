@@ -19,10 +19,10 @@ JSON pointer, ``STATE.json``: ``{"version": v, "batch_id": b,
   corrupts state: a replayed batch rewrites its own (still unlisted) part
   and the stream checkpoint replays it idempotently (same input -> same
   v+1 content).
-- Compaction: once the live parts reach Spark's parallel-listing threshold
-  (``spark.sql.sources.parallelPartitionDiscovery.threshold``, beyond which
-  every state load would list its paths in a Spark job), the next batch
-  writes all sketches as one part, ``v<v>/sketches``.
+- Compaction: every load opens every part's files, so once the live parts
+  reach two per core (``2 * defaultParallelism``, at most Spark's
+  parallel-listing threshold) the next batch writes all sketches as one
+  part, ``v<v>/sketches`` (:func:`_compaction_bound`).
 - Pruning keeps the current and the previous version whole, and of older
   versions only the sketch parts the current or previous pointer names.
 - A pointer without ``sketch_parts`` (written before parts existed) names
@@ -54,10 +54,18 @@ _POINTER = "STATE.json"
 
 
 def _compaction_bound(spark: SparkSession) -> int:
-    """Live sketch parts at which the next batch writes them as one: above
-    this many paths Spark lists a load's files in a distributed job."""
-    return int(spark.conf.get(
+    """Live sketch parts at which the next batch writes them as one.
+
+    A part holds about ``defaultParallelism`` files, and every load opens
+    them all: on local[4] (4 vCPUs), an append over 31 parts took 0.39 s
+    more than over one part holding the same docs, while a compacting
+    append cost 0.78 s more than a part append.  Amortized over a cycle,
+    about two parts per core is the cheapest bound (8 there); it never
+    exceeds Spark's parallel-listing threshold, beyond which every load
+    would list its paths in a distributed job."""
+    listing = int(spark.conf.get(
         "spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    return min(2 * spark.sparkContext.defaultParallelism, listing)
 
 
 class StreamingDedup:

@@ -148,6 +148,18 @@ def test_prune_deletes_only_dead_parts(spark, corpus, tmp_path):
                              "v3": ["assignments", "sketches"]}
 
 
+def test_compaction_bound_is_two_parts_per_core(spark):
+    assert ingest._compaction_bound(spark) == \
+        2 * spark.sparkContext.defaultParallelism
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        assert ingest._compaction_bound(spark) == 3
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_compaction_writes_one_part(spark, corpus, batch_answer, tmp_path,
                                     monkeypatch):
     monkeypatch.setattr(ingest, "_compaction_bound", lambda spark: 2)
